@@ -15,13 +15,17 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
+import uuid
+from functools import partial
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from stream_processing_platform_spark.registry import queries  # noqa: E402
-from stream_processing_platform_spark.session import get_spark  # noqa: E402
+from stream_processing_platform_spark.session import get_spark, scoped_conf  # noqa: E402
 
 BENCH_QUERIES = [
     "q01_pricing_summary",       # scan-heavy grouped aggregation
@@ -51,14 +55,183 @@ BENCH_QUERIES = [
 ]
 
 
+# Non-headline operators, timed like the headline set.
+EXTENDED_QUERIES = [
+    "q_ann_pq",
+    "q_corpus_mixture",
+    "q_doc_commonness",
+    "q_top_tokens",
+    "q_unpivot_event_counts",
+    "q_winnow_dup_pairs",
+    "q_event_sequence",
+    "q_anomaly_zscore",
+    "q_ann_rerank",
+    "q_winnow_fingerprints",
+    "q02_min_cost_supplier",
+    "q_heavy_hitters",
+    "q_hierarchical_rollup",
+    "q_unigram_logprob",
+    "q_zorder_events",
+    "q_kmeans_assign",
+    "q_gap_fill_linear",
+    "q_ohlc_bars",
+    "q_bm25_rank",
+    "q_lpa_labels",
+    "q_json_variant",
+    "q_mad_outliers",
+    "q_semdedup",
+    "q_semdedup_incremental",
+    "q_hybrid_rrf",
+    "q_mmr_diversify",
+    "q_cohort_retention",
+    "q_recursive_hierarchy",
+    "q_ewma",
+    "q_triangle_counts",
+    "q_incremental_agg_refresh",
+    "q_window_distribution",
+    "q_percentiles_distributed",
+    "q_snapshot_diff",
+    "q_kcore",
+    "q_impute_mode",
+    "q_window_range_frame",
+    "q_kanon_pseudonymize",
+    "q_correlation",
+    "q_phrase_search",
+    "q_winsorize",
+    "q_association_rules",
+    "q_holt",
+    "q_clustering_coeff",
+    "q_simhash_pairs",
+    "q_substring_dup_spans",
+    "q_holt_winters",
+    "q_gopher_rules",
+    "q_dsir_weights",
+    "q_ann_ivf",
+    "q_approx_percentile",  # sketch-then-verify EXACT (also in headline)
+    "q_quality_classifier",
+    "q_unigram_tokenize",
+    "q_acf",
+    "q_cusum_changepoint",
+    "q_weighted_sample",
+    "q_seasonal_decompose",
+    "q_warc_extract",
+    "q_wds_roundtrip",
+    "q_domain_stats",
+    "q_blocklist_filter",
+    "q_url_canonicalize",
+    "q_boilerplate_blocks",
+    "q_approx_distinct_kmv",
+    "q_mixture_temperature",
+    "q_badwords_filter",
+    "q_wds_multimodal",
+    "q_meta_robots_filter",
+    "q_chunk_sentences",
+    "q_cdx_index",
+    "q_robots_rules_filter",
+    "q_mp3_probe",
+    "q_unicode_nfc",
+    "q_script_mix",
+    "q_charset_decode",
+    "q_robots_txt_parse",
+    # q_lang_id_trained stays out: its 6 training jobs run at
+    # DataFrame-construction time, so a timed rebuild would spend
+    # ~30 s/run on untimed training.
+    "q_sitemap_parse",
+    "q_crawl_schedule",
+    "q_web_funnel",
+    "q_outlink_frontier",
+    "q_lang_mismatch",
+]
+
+RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
+
+
+def _median_time(build) -> float:
+    """Median wall time of ``build().collect()`` over RUNS runs, after
+    one untimed warm-up pass that takes JIT/codegen/file-listing costs
+    out of the measurement. The median absorbs single-run jitter. Each
+    run REBUILDS the DataFrame: re-collecting the same instance lets
+    the DAG scheduler skip completed shuffle map stages (measured 10x
+    "speedups" that were just stage reuse); a fresh lineage forces
+    every stage to actually run."""
+    build().count()
+    samples = []
+    for _ in range(RUNS):
+        df = build()
+        t0 = time.time()
+        df.collect()
+        samples.append(time.time() - t0)
+    samples.sort()
+    return round(samples[len(samples) // 2], 3)
+
+
+def _parquet_split(fixture_fn, decode_fn):
+    """(stage_fn, read_fn) for a codec query: stage writes its fixture
+    payloads as parquet, read decodes them."""
+
+    def stage(spark, sf_dir, out):
+        fixture_fn(spark, sf_dir).write.mode("overwrite").parquet(out)
+
+    return stage, lambda spark, out: decode_fn(spark.read.parquet(out))
+
+
+def _split_entries():
+    """``(name, stage_fn, read_fn)`` rows timed in two steps: the stage
+    step writes the query's input directory ONCE (un-timed; its cost is
+    recorded separately) and only the read step is timed — the part
+    whose shape matters at 100 TB, where payload bytes come from
+    storage, not an encoder.
+
+    - Codec queries: the in-query fixture ENCODER (a test harness, not
+      the engine) dominated their plain timings (q_multimodal_avc_decode
+      was mostly the synthetic encoder's motion search;
+      q_video_frame_sample's synth+sha2 leg was 1.65 s of 2.9 s).
+    - q_http_headers: the declared query memoizes its 16 residue
+      classes — semantics-preserving but bench-flattering — so the
+      split times parse-per-row over pre-materialized payloads.
+    - q_avro_roundtrip: its body re-WRITES the .avro files at
+      construction time, which a timed rebuild can't separate from the
+      OCF block-decode read. q_stream_avro shares this reader and stays
+      correctness-gated."""
+    from stream_processing_platform_spark.queries.relational import (
+        avro_read_agg_df,
+        avro_write_fixture,
+    )
+    from stream_processing_platform_spark.queries.similarity import (
+        avc_deblock_fixture_df,
+        avc_decode_df,
+        avc_fixture_df,
+        flac_decode_df,
+        flac_fixture_df,
+        g711_decode_df,
+        g711_fixture_df,
+        video_decode_df,
+        video_fixture_df,
+    )
+    from stream_processing_platform_spark.queries.web import (
+        httpr_decode_df,
+        httpr_fixture_df,
+    )
+
+    codecs = [
+        ("q_audio_segments_flac", flac_fixture_df, flac_decode_df),
+        ("q_audio_segments_g711", g711_fixture_df, g711_decode_df),
+        ("q_multimodal_avc_decode", avc_fixture_df, avc_decode_df),
+        ("q_multimodal_avc_deblock", avc_deblock_fixture_df, avc_decode_df),
+        ("q_video_frame_sample", video_fixture_df, video_decode_df),
+        ("q_http_headers", httpr_fixture_df, httpr_decode_df),
+    ]
+    return [(name, *_parquet_split(f, d)) for name, f, d in codecs] + [
+        ("q_avro_roundtrip", avro_write_fixture, avro_read_agg_df)
+    ]
+
+
 def stream_windowed_agg(spark, sf_dir: str) -> tuple[float, int]:
     """End-to-end Structured Streaming run over the events table: file
     source → watermark → 1 h tumbling window per event_type → memory sink,
     availableNow trigger. This is the reference's headline scenario
     (Kafka→KeyBy→Window→Agg→Kafka, target 5K–30K rec/s; reported 45K) —
     returns (elapsed_sec, input_rows) so the JSON can carry rec/s."""
-    import tempfile
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import LongType
 
@@ -86,11 +259,7 @@ def stream_windowed_agg(spark, sf_dir: str) -> tuple[float, int]:
     # sweep: 2→77k, 4→89k, 8→82k, 16→64k rows/s — 4 wins. Sizing shuffle
     # partitions to the data is the same rule SCALE.md applies
     # everywhere; a real cluster run would raise it with volume.
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        import uuid
-
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         # warm-up (JIT/codegen/state-store init) then median of 3 timed
         # runs — the same methodology as the batch queries.
         samples: list[float] = []
@@ -108,8 +277,6 @@ def stream_windowed_agg(spark, sf_dir: str) -> tuple[float, int]:
             q.awaitTermination()
             if timed:
                 samples.append(time.time() - t0)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
     samples.sort()
     return samples[len(samples) // 2], n_rows
 
@@ -118,12 +285,10 @@ def _drain_load(max_wait: float = 1500.0) -> float:
     """HARD idleness gate: an official bench row may only be taken on an
     idle machine. Spin-wait until the 1-min load average drops below
     ``SPARK_GRAFT_BENCH_MAX_LOAD`` (default 1.0) and REFUSE (exit 2) if
-    it never does within ``max_wait`` — r9's official row (13.375 s /
-    81k rows/s) and r12's (14.988 s at load 8.5) were both pure
-    co-tenant load noise with zero plan changes, and merely RECORDING
-    load_avg in the JSON (the r9 fix) diagnosed but did not prevent the
-    third occurrence. The 1-min load decays ~e× per idle minute, so
-    8.5 → <1.0 needs ~2-3 idle minutes; 25 min of budget covers any
+    it never does within ``max_wait``: rows timed at load 8.5 were pure
+    co-tenant noise with zero plan changes, and merely RECORDING
+    load_avg in the JSON did not prevent the next one. The 1-min load
+    decays ~e× per idle minute, so 25 min of budget covers any
     realistic post-sweep drain. Returns the load at the moment timing
     starts so the emitted JSON line carries its own health signal (set
     SPARK_GRAFT_BENCH_NO_WAIT=1 to skip the gate, e.g. in tests)."""
@@ -154,240 +319,34 @@ def main() -> None:
     spark = get_spark(app_name="spp-spark-bench")
     qs = queries()
 
-    runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    timings: dict[str, float] = {}
-    for name in BENCH_QUERIES:
-        qs[name](spark, sf_dir).count()  # warm-up pass: JIT/codegen/
-        # file-listing costs out of the measurement, same methodology as
-        # the streaming warm-up.
-        # Median of N runs — round-over-round deltas under ~0.2 s were
-        # single-run jitter in r1→r2; the median makes them trustworthy.
-        # Each run REBUILDS the DataFrame: re-collecting the same
-        # instance lets the DAG scheduler skip completed shuffle map
-        # stages (measured 10x "speedups" that were just stage reuse);
-        # a fresh lineage forces every stage to actually run.
-        samples = []
-        for _ in range(runs):
-            df = qs[name](spark, sf_dir)
-            t0 = time.time()
-            df.collect()
-            samples.append(time.time() - t0)
-        samples.sort()
-        timings[name] = round(samples[len(samples) // 2], 3)
+    timings = {
+        name: _median_time(partial(qs[name], spark, sf_dir)) for name in BENCH_QUERIES
+    }
 
     stream_sec, stream_rows = stream_windowed_agg(spark, sf_dir)
     timings["stream_windowed_agg"] = round(stream_sec, 3)
 
     total = round(sum(timings.values()), 3)
 
-    # Round-5/6 additions, timed the same way but kept OUT of the
-    # headline total so `value` stays comparable across rounds on the
-    # fixed 21-query set.
-    extended: dict[str, float] = {}
-    for name in (
-        "q_ann_pq",
-        "q_corpus_mixture",
-        "q_doc_commonness",
-        "q_top_tokens",
-        "q_unpivot_event_counts",
-        "q_winnow_dup_pairs",
-        "q_event_sequence",
-        "q_anomaly_zscore",
-        "q_ann_rerank",
-        "q_winnow_fingerprints",
-        "q02_min_cost_supplier",
-        "q_heavy_hitters",
-        "q_hierarchical_rollup",
-        "q_unigram_logprob",
-        "q_zorder_events",
-        "q_kmeans_assign",
-        "q_gap_fill_linear",
-        "q_ohlc_bars",
-        "q_bm25_rank",
-        "q_lpa_labels",
-        "q_json_variant",
-        "q_mad_outliers",
-        # round-7 additions
-        "q_semdedup",
-        "q_semdedup_incremental",
-        "q_hybrid_rrf",
-        "q_mmr_diversify",
-        "q_cohort_retention",
-        "q_recursive_hierarchy",
-        "q_ewma",
-        "q_triangle_counts",
-        "q_incremental_agg_refresh",
-        "q_window_distribution",
-        "q_percentiles_distributed",
-        "q_snapshot_diff",
-        "q_kcore",
-        "q_impute_mode",
-        "q_window_range_frame",
-        "q_kanon_pseudonymize",
-        "q_correlation",
-        "q_phrase_search",
-        "q_winsorize",
-        "q_association_rules",
-        "q_holt",
-        "q_clustering_coeff",
-        # round-8 additions
-        "q_simhash_pairs",
-        "q_substring_dup_spans",
-        "q_holt_winters",
-        # round-9 additions (q_video_frame_sample moved to the
-        # codec-split loop in r15: its in-query synth+sha2 leg measured
-        # 1.65 s of the 2.9 s total — the plain entry mostly timed the
-        # fixture encoder)
-        "q_gopher_rules",
-        "q_dsir_weights",
-        "q_ann_ivf",
-        # round-10 additions (codec entries timed decode-only below —
-        # their fixture ENCODE stage is pre-materialized un-timed)
-        "q_approx_percentile",  # now sketch-then-verify EXACT (also in headline)
-        "q_quality_classifier",
-        "q_unigram_tokenize",
-        "q_acf",
-        "q_cusum_changepoint",
-        "q_weighted_sample",
-        "q_seasonal_decompose",
-        # round-11 additions (q_multimodal_avc_deblock timed decode-only
-        # below with the other codec entries)
-        "q_warc_extract",
-        "q_wds_roundtrip",
-        "q_domain_stats",
-        "q_blocklist_filter",
-        "q_url_canonicalize",
-        "q_boilerplate_blocks",
-        "q_approx_distinct_kmv",
-        "q_mixture_temperature",
-        "q_badwords_filter",
-        "q_wds_multimodal",
-        "q_meta_robots_filter",
-        "q_chunk_sentences",
-        "q_cdx_index",
-        "q_robots_rules_filter",
-        # round-12 additions
-        "q_mp3_probe",
-        "q_unicode_nfc",
-        "q_script_mix",
-        "q_charset_decode",
-        "q_robots_txt_parse",
-        # round-13 additions (q_lang_id_trained stays out: its 6
-        # training jobs run at DataFrame-construction time, so a
-        # timed rebuild would spend ~30 s/run on untimed training —
-        # the q_avro_roundtrip exclusion rule)
-        "q_sitemap_parse",
-        "q_crawl_schedule",
-        "q_web_funnel",
-        # round-14 additions (q_lang_mismatch is pure column algebra;
-        # the frontier is the round's headline operator).
-        # q_http_headers moved to the codec-split loop below (r15): the
-        # declared query's 16-residue parse memo flattered this number;
-        # the split times parse-per-row over pre-materialized payloads.
-        "q_outlink_frontier",
-        "q_lang_mismatch",
-    ):
-        qs[name](spark, sf_dir).count()
-        samples = []
-        for _ in range(runs):
-            df = qs[name](spark, sf_dir)
-            t0 = time.time()
-            df.collect()
-            samples.append(time.time() - t0)
-        samples.sort()
-        extended[name] = round(samples[len(samples) // 2], 3)
-
-    # Codec queries: the in-query fixture ENCODER (a test harness, not
-    # the engine) dominated the r10 numbers (q_multimodal_avc_decode
-    # "15.8 s" was mostly the synthetic encoder's motion search). Per
-    # the r10 verdict, pre-materialize the fixture bytes ONCE into a
-    # parquet staging dir (un-timed apart from its own recorded cost)
-    # and time ONLY the decode path — the stage whose shape matters at
-    # 100 TB, where payload bytes come from storage, not an encoder.
-    import shutil
-    import tempfile
-
-    from stream_processing_platform_spark.queries.similarity import (
-        avc_deblock_fixture_df,
-        avc_decode_df,
-        avc_fixture_df,
-        flac_decode_df,
-        flac_fixture_df,
-        g711_decode_df,
-        g711_fixture_df,
-        video_decode_df,
-        video_fixture_df,
-    )
-    from stream_processing_platform_spark.queries.web import (
-        httpr_decode_df,
-        httpr_fixture_df,
-    )
-
+    # Timed the same way but kept OUT of the headline total so `value`
+    # stays comparable across rounds on the fixed 21-query set.
+    extended = {
+        name: _median_time(partial(qs[name], spark, sf_dir)) for name in EXTENDED_QUERIES
+    }
     fixture_encode: dict[str, float] = {}
-    for name, fixture_fn, decode_fn in (
-        ("q_audio_segments_flac", flac_fixture_df, flac_decode_df),
-        ("q_audio_segments_g711", g711_fixture_df, g711_decode_df),
-        ("q_multimodal_avc_decode", avc_fixture_df, avc_decode_df),
-        ("q_multimodal_avc_deblock", avc_deblock_fixture_df, avc_decode_df),
-        ("q_video_frame_sample", video_fixture_df, video_decode_df),
-        # r15: per-row HTTP parse over pre-materialized payloads (the
-        # declared query memoizes its 16 residue classes — semantics-
-        # preserving but bench-flattering; r14 verdict item 7)
-        ("q_http_headers", httpr_fixture_df, httpr_decode_df),
-    ):
-        stage = tempfile.mkdtemp(prefix="spp_bench_codec_fixture_")
+    for name, stage_fn, read_fn in _split_entries():
+        stage = tempfile.mkdtemp(prefix="spp_bench_split_")
         try:
             t0 = time.time()
-            fixture_fn(spark, sf_dir).write.mode("overwrite").parquet(stage)
+            stage_fn(spark, sf_dir, stage)
             fixture_encode[name] = round(time.time() - t0, 3)
-            fixed = spark.read.parquet(stage)
-            decode_fn(fixed).count()  # warm-up, same as above
-            samples = []
-            for _ in range(runs):
-                df = decode_fn(spark.read.parquet(stage))
-                t0 = time.time()
-                df.collect()
-                samples.append(time.time() - t0)
-            samples.sort()
-            extended[name] = round(samples[len(samples) // 2], 3)
+            extended[name] = _median_time(partial(read_fn, spark, stage))
         finally:
             shutil.rmtree(stage, ignore_errors=True)
 
-    # spp_avro read path (r15, driver-visible per the r14 verdict item
-    # 4): the .avro directory is written ONCE (un-timed, cost recorded
-    # like the codec encodes) and the timed region is the OCF
-    # block-decode read + aggregate — q_avro_roundtrip's own body
-    # re-WRITES the files at construction time (the reason it was
-    # excluded from the plain loop), so the split is the only honest
-    # timing. q_stream_avro shares this reader and stays
-    # correctness-gated (a streaming query does its work at
-    # construction, which the timed-rebuild methodology can't see).
-    from stream_processing_platform_spark.queries.relational import (
-        avro_read_agg_df,
-        avro_write_fixture,
-    )
-
-    stage = tempfile.mkdtemp(prefix="spp_bench_avro_fixture_")
-    try:
-        t0 = time.time()
-        avro_write_fixture(spark, sf_dir, stage)
-        fixture_encode["q_avro_roundtrip"] = round(time.time() - t0, 3)
-        avro_read_agg_df(spark, stage).count()  # warm-up, same as above
-        samples = []
-        for _ in range(runs):
-            df = avro_read_agg_df(spark, stage)
-            t0 = time.time()
-            df.collect()
-            samples.append(time.time() - t0)
-        samples.sort()
-        extended["q_avro_roundtrip"] = round(samples[len(samples) // 2], 3)
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
-
-    # Extended (post-r4) operators are measured identically but live in
-    # their own file: the driver tail-captures only ~2 KB of stdout, and
-    # keeping 47+ entries inline truncated the JSON head in r6/r7/r8
-    # (parsed: null). The one emitted line must stay small.
+    # Extended timings live in their own file: the driver tail-captures
+    # only ~2 KB of stdout, and keeping 47+ entries inline truncated the
+    # JSON head (parsed: null). The one emitted line must stay small.
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_EXTENDED.json"), "w") as fh:
         json.dump(
@@ -419,7 +378,7 @@ def main() -> None:
         else float(os.environ.get("SPARK_GRAFT_BENCH_MAX_LOAD", "1.0")),
         # Effective core count: the driver re-runs the bench at a lower
         # $SPARK_GRAFT_CPUS to measure scaling, so report what session.py
-        # actually used (r14 bug: os.cpu_count() printed 32 on the c8 run).
+        # actually used, not os.cpu_count().
         "cores": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count())),
         # Fixed 21-query headline set (comparable to r3+); extended
         # operator timings in BENCH_EXTENDED.json, prose in BENCH_NOTES.md.

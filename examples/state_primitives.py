@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 from stream_processing_platform_spark.session import get_spark
 from stream_processing_platform_spark.sources.streaming import file_source
 from stream_processing_platform_spark.streaming.stateful_v2 import (
+    STATE_V2_CONF,
     map_state_counts,
     recent_events,
     reducing_state,
@@ -83,8 +84,13 @@ def run_stream(df, name: str):
 
 
 def main() -> None:
-    spark = get_spark(app_name="example-state-primitives")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    # This script owns its session, so it picks the RocksDB provider that
+    # transformWithState needs once, for every query it runs.
+    spark = get_spark(
+        app_name="example-state-primitives",
+        shuffle_partitions=4,
+        extra_conf=STATE_V2_CONF,
+    )
     src = tempfile.mkdtemp(prefix="spp_state_example_")
     spark.createDataFrame(EVENTS, SCHEMA).coalesce(1).write.mode("append").parquet(src)
 

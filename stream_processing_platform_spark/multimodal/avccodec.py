@@ -502,6 +502,8 @@ def decode_residual_block(br: BitReader, nC: int, max_coeffs: int) -> list[int]:
             if p:
                 lz = 16 - p.bit_length()
                 prefix += lz
+                if prefix > 32:
+                    raise ValueError("AVC: level prefix overflow")
                 pos = br.pos + lz + 1
                 if pos > br._nbits:
                     raise IndexError("AVC: bitstream truncated")

@@ -28,12 +28,12 @@ def ensure_min_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
     return df
 
 
-def enable_runtime_bloom_filters(
-    spark,
+def runtime_bloom_filter_conf(
     creation_side_threshold: str = "50MB",
     application_side_threshold: str = "1GB",
-) -> None:
-    """Turn on Catalyst's injected runtime bloom filters for shuffle joins.
+) -> dict[str, str]:
+    """Session conf that turns on Catalyst's injected runtime bloom
+    filters for shuffle joins; apply it with ``session.scoped_conf``.
 
     At 100 TB the win: when a selective filter sits on one join side
     (e.g. ``orders WHERE status='F'`` joining lineitem), Spark builds a
@@ -48,15 +48,13 @@ def enable_runtime_bloom_filters(
     force injection at local scale — the gate is
     tests/test_plan_quality.py::test_runtime_bloom_filter_injected).
     """
-    spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        creation_side_threshold,
-    )
-    spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        application_side_threshold,
-    )
+    return {
+        "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold":
+            creation_side_threshold,
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold":
+            application_side_threshold,
+    }
 
 
 def checkpointer(df: DataFrame):

@@ -27,8 +27,10 @@ from pyspark.sql.types import LongType, TimestampNTZType
 
 from stream_processing_platform_spark.operators.windows_batch import epoch_ms
 from stream_processing_platform_spark.registry import query
+from stream_processing_platform_spark.session import scoped_conf
 from stream_processing_platform_spark.sources.streaming import file_source
 from stream_processing_platform_spark.streaming import windows as W
+from stream_processing_platform_spark.streaming.stateful_v2 import STATE_V2_CONF
 
 HOUR_MS = 3_600_000
 
@@ -627,18 +629,8 @@ def q_stream_state_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _events_stream(spark, sf_dir).withColumn(
         "value_cents", F.round(F.col("value") * 100, 0)
     )
-    # running_stats flips the session to the RocksDB provider (required
-    # by transformWithState); restore afterwards so sibling streaming
-    # queries in the same sweep keep the default HDFS-backed store.
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        stats = running_stats(s, "user_id", "value_cents")
-        out = _run_to_table(stats)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    with scoped_conf(spark, STATE_V2_CONF):
+        out = _run_to_table(running_stats(s, "user_id", "value_cents"))
     return out.select(
         "key",
         "cnt",
@@ -665,14 +657,8 @@ def q_stream_state_v2_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_platform_spark.streaming.stateful_v2 import map_state_counts
 
     s = _events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(map_state_counts(s, "user_id", "event_type"))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select("key", "cat", "n")
 
 
@@ -700,14 +686,8 @@ def q_stream_state_v2_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_platform_spark.streaming.stateful_v2 import recent_events
 
     s = _events_stream(spark, sf_dir).withColumn("ts_ms", epoch_ms(F.col("ts")))
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(recent_events(s, "user_id", "ts_ms", "event_id", n=5))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select("key", "recent")
 
 
@@ -729,14 +709,8 @@ def q_stream_state_v2_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     from stream_processing_platform_spark.streaming.stateful_v2 import reducing_state
 
     s = _events_stream(spark, sf_dir)
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(reducing_state(s, "user_id", max, "value"))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select("key", "acc")
 
 
@@ -831,14 +805,8 @@ def q_stream_holt(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(holt_state(s, "user_id", alpha=0.5, beta=0.25))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select("key", "n", "level_c", "trend_c", "forecast_1_c")
 
 
@@ -879,18 +847,12 @@ def q_stream_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(
             holt_winters_state(
                 s, "user_id", alpha=_HW_A, beta=_HW_B, gamma=_HW_G, period=_HW_M
             )
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select(
         "key", "n", "level_c", "trend_c", "season_1_c", "forecast_1_c"
     )
@@ -926,14 +888,8 @@ def q_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(ewma_state(s, "user_id", alpha=0.25))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select("key", "n", "ewma_c")
 
 
@@ -1542,14 +1498,8 @@ def q_stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(cusum_state(s, "user_id", target_cents=_CUSUM_TARGET_C))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select("key", "s_max", "at_seq", "n")
 
 
@@ -1608,14 +1558,8 @@ def q_stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapped = stream.where(F.col("n_chars") > 0).select(
         "source", "doc_id", key.alias("key_nano")
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(weighted_reservoir_state(mapped, "source", k=_WRES_K))
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select(F.col("key").alias("source"), "doc_id", "key_nano")
 
 
@@ -1678,18 +1622,12 @@ def q_stream_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         repro_hash_col(F.col("user_id"), salt=_KMV_SALT).alias("h"),
     )
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
+    with scoped_conf(spark, STATE_V2_CONF):
         out = _run_to_table(
             kmv_distinct_state(
                 mapped, "event_type", k=_KMV_K, mod=REPRO_INIT_MOD
             )
         )
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
     return out.select(
         F.col("key").alias("event_type"), "approx_distinct", "kth_hash"
     )

@@ -10,10 +10,35 @@ partition count that AQE coalesces downward when partitions are small.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set session conf for the body of a ``with`` block only.
+
+    On exit — normal or by exception — each key gets back the value it
+    had before, and a key that had no session value is unset again. The
+    one way an operator, query or test changes conf for a single query:
+    the session is shared (driver sweeps, the pytest fixture), so a
+    change that outlives its query silently reconfigures every query
+    after it."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def metrics_conf() -> dict[str, str]:

@@ -404,7 +404,7 @@ def _block_column_decoder(fields: list[tuple[str, object]]):
     exec("\n".join(lines), ns)  # noqa: S102 — schema-derived codegen
     fn = ns["_decode"]
     if len(_DEC_CACHE) >= 64:
-        _DEC_CACHE.clear()
+        del _DEC_CACHE[next(iter(_DEC_CACHE))]  # evict the oldest
     _DEC_CACHE[key] = fn
     return fn
 

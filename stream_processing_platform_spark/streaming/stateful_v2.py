@@ -15,6 +15,12 @@ instances (changelog-checkpointed to the checkpoint location) — no
 driver state, no full-store rewrite per batch, per-key TTL eviction
 handled by the store itself.
 
+STATE STORE: ``transformWithState`` runs only on the RocksDB provider,
+which Spark reads from the session conf when a query starts. The
+builders leave the session alone: callers build and start the query
+under ``scoped_conf(spark, STATE_V2_CONF)`` (session.py), so other
+stateful queries on the session keep its default store.
+
 RUNTIME: executing a transformWithState query needs the Python
 ``protobuf`` runtime (the state-server wire protocol). Where the real
 package is absent (this container), ``ensure_state_v2_runtime``
@@ -42,6 +48,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 
 ROCKSDB_PROVIDER = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+STATE_V2_CONF = {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
 
 _VENDOR_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "_vendor")
 _shipped_to_workers = False
@@ -111,12 +118,6 @@ def requires_state_v2_runtime() -> bool:
     return ensure_state_v2_runtime(None)
 
 
-def ensure_rocksdb_state_store(spark) -> None:
-    """transformWithState requires the RocksDB provider; set it on the
-    session (takes effect for queries started afterwards)."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-
-
 class RunningStatsProcessor(StatefulProcessor):
     """Per-key running (count, total, min, max) in a typed ValueState —
     the canonical state-primitive demo: one named handle, updated per
@@ -175,9 +176,9 @@ def running_stats(
 
     Spark only allows state TTL under ``TimeMode.ProcessingTime`` (it
     raises STATEFUL_PROCESSOR_INCORRECT_TIME_MODE_TO_ASSIGN_TTL
-    otherwise), so requesting ``ttl_ms`` switches the time mode."""
+    otherwise), so requesting ``ttl_ms`` switches the time mode.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return (
         df.groupBy(key_col)
         .transformWithStateInPandas(
@@ -224,9 +225,9 @@ class TypeCountsProcessor(StatefulProcessor):
 
 def map_state_counts(df: DataFrame, key_col: str, cat_col: str) -> DataFrame:
     """Per-key per-category running counts in a named MapState. Output
-    (key, cat, n); update output mode."""
+    (key, cat, n); update output mode.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         TypeCountsProcessor(cat_col),
         outputStructType="key long, cat string, n long",
@@ -271,9 +272,9 @@ class RecentEventsProcessor(StatefulProcessor):
 
 def recent_events(df: DataFrame, key_col: str, ts_ms_col: str, id_col: str, n: int = 5) -> DataFrame:
     """Last-n events per key in a named ListState; output (key, recent)
-    where recent is the comma-joined ids in (ts, id) order."""
+    where recent is the comma-joined ids in (ts, id) order.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         RecentEventsProcessor(n, ts_ms_col, id_col),
         outputStructType="key long, recent string",
@@ -312,9 +313,9 @@ class ReducingProcessor(StatefulProcessor):
 
 def reducing_state(df: DataFrame, key_col: str, reduce_fn, value_col: str = "value") -> DataFrame:
     """Per-key reduce into a ValueState accumulator (ReducingState
-    semantics). Output (key, acc); update output mode."""
+    semantics). Output (key, acc); update output mode.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         ReducingProcessor(reduce_fn, value_col),
         outputStructType="key long, acc double",
@@ -382,9 +383,9 @@ def ewma_state(
 ) -> DataFrame:
     """Per-key streaming EWMA via transformWithState. Output
     (key, n, ewma_c); update output mode — the last emission per key is
-    the current smoothed level."""
+    the current smoothed level.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         EwmaProcessor(alpha, ts_ms_col, seq_col, value_col),
         outputStructType="key long, n long, ewma_c double",
@@ -473,9 +474,9 @@ def cusum_state(
 ) -> DataFrame:
     """Per-key streaming CUSUM via transformWithState. Output
     (key, s_max, at_seq, n); update mode — the last emission per key is
-    the current changepoint estimate."""
+    the current changepoint estimate.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         CusumProcessor(target_cents, kappa_milli, ts_ms_col, seq_col, value_col),
         outputStructType="key long, s_max long, at_seq long, n long",
@@ -536,9 +537,9 @@ def weighted_reservoir_state(
 ) -> DataFrame:
     """Per-stratum streaming weighted sample via transformWithState.
     Output (key, doc_id, key_nano); update mode — the last emission per
-    stratum is the current reservoir."""
+    stratum is the current reservoir.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(stratum_col).transformWithStateInPandas(
         WeightedReservoirProcessor(k, key_nano_col, id_col),
         outputStructType="key string, doc_id long, key_nano long",
@@ -594,9 +595,9 @@ def kmv_distinct_state(
 ) -> DataFrame:
     """Per-group streaming KMV distinct estimate via transformWithState.
     Output (key, approx_distinct, kth_hash); update mode — the last
-    emission per group is the current estimate."""
+    emission per group is the current estimate.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(group_col).transformWithStateInPandas(
         KmvDistinctProcessor(k, mod, hash_col),
         outputStructType="key string, approx_distinct long, kth_hash long",
@@ -680,9 +681,9 @@ def holt_state(
     value_col: str = "value_cents",
 ) -> DataFrame:
     """Per-key streaming Holt smoothing via transformWithState. Output
-    (key, n, level_c, trend_c, forecast_1_c); update output mode."""
+    (key, n, level_c, trend_c, forecast_1_c); update output mode.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         HoltProcessor(alpha, beta, ts_ms_col, seq_col, value_col),
         outputStructType=(
@@ -789,9 +790,9 @@ def holt_winters_state(
     value_col: str = "value_cents",
 ) -> DataFrame:
     """Per-key streaming Holt-Winters via transformWithState. Output
-    (key, n, level_c, trend_c, season_1_c, forecast_1_c); update mode."""
+    (key, n, level_c, trend_c, season_1_c, forecast_1_c); update mode.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         HoltWintersProcessor(alpha, beta, gamma, period, ts_ms_col, seq_col, value_col),
         outputStructType=(
@@ -854,9 +855,9 @@ class ExpiringCountProcessor(StatefulProcessor):
 
 def expiring_counts(df: DataFrame, key_col: str, delay_ms: int = 0) -> DataFrame:
     """Per-key counts with timer-driven eviction (ProcessingTime mode).
-    Output (key, kind, cnt) where kind is 'data' | 'timeout'."""
+    Output (key, kind, cnt) where kind is 'data' | 'timeout'.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     return df.groupBy(key_col).transformWithStateInPandas(
         ExpiringCountProcessor(delay_ms),
         outputStructType="key long, kind string, cnt long",
@@ -917,11 +918,11 @@ def session_timeouts(
     """Inactivity-timeout sessions on event-time timers: requires an
     event-time column (timestamp type) named ``ts_col``; emits
     (key, kind, cnt) with kind 'open' per batch and 'session_closed'
-    when the watermark passes last_ts + gap_ms."""
+    when the watermark passes last_ts + gap_ms.
+    Build and start the query under ``scoped_conf(spark, STATE_V2_CONF)``."""
     from pyspark.sql import functions as F
 
     ensure_state_v2_runtime(df.sparkSession)
-    ensure_rocksdb_state_store(df.sparkSession)
     wm = df.withWatermark(ts_col, watermark_delay).withColumn(
         "ts_ms", F.unix_millis(F.col(ts_col).cast("timestamp"))
     )

@@ -77,6 +77,20 @@ def test_cavlc_residual_roundtrip_all_nc_classes():
         assert got == coeffs, (nC, max_c, coeffs, got)
 
 
+def test_level_prefix_overflow_raises():
+    """A level_prefix longer than 32 zero bits is not a valid CAVLC
+    code: 32 zeros (two all-zero 16-bit peeks) followed by a 15-zero
+    run and its stop bit must raise, not decode a 2^44-scale level."""
+    bw = A.BitWriter()
+    A._write_coeff_token(bw, 0, 1, 0)  # TotalCoeff=1, TrailingOnes=0
+    bw.u(0, 32)
+    bw.u(1, 16)  # 15 more zeros, then the stop bit: prefix 47
+    bw.u(0xFFFFFFFF, 32)  # room for any suffix the decoder would read
+    bw.align_zero()
+    with pytest.raises(ValueError, match="level prefix overflow"):
+        A.decode_residual_block(A.BitReader(bw.getvalue()), 0, 16)
+
+
 def test_exp_golomb_and_rbsp_escaping():
     bw = A.BitWriter()
     vals = [0, 1, 2, 7, 255, 100000]

@@ -131,6 +131,23 @@ def test_columnar_block_decode_pins_row_path(tmp_path):
         assert got == list(read_ocf(p)) == rows
 
 
+def test_decoder_cache_evicts_oldest_at_cap():
+    """At its 64-entry cap the compiled-decoder cache drops only the
+    oldest decoder: after 65 distinct schemas it holds 64, and the 64
+    most recently compiled are all still cached."""
+    from stream_processing_platform_spark.sources import avrocodec
+
+    avrocodec._DEC_CACHE.clear()
+    keys = []
+    for i in range(65):
+        fields = [(f"c{j}", "long") for j in range(i + 1)]
+        avrocodec._block_column_decoder(fields)
+        keys.append(tuple(typ for _, typ in fields))
+    assert len(avrocodec._DEC_CACHE) == 64
+    assert keys[0] not in avrocodec._DEC_CACHE
+    assert all(k in avrocodec._DEC_CACHE for k in keys[1:])
+
+
 def test_bad_magic_and_corrupt_sync_raise(tmp_path):
     p = str(tmp_path / "bad.avro")
     with open(p, "wb") as f:

@@ -22,7 +22,6 @@ from pyspark.sql.types import (
 )
 
 from stream_processing_platform_spark.sources.kafka_loopback import (
-
     LoopbackProducerSink,
     kafka_loopback_source,
     stage_kafka_records,

@@ -33,6 +33,7 @@ from pathlib import Path
 import pytest
 
 from stream_processing_platform_spark.registry import queries
+from stream_processing_platform_spark.session import scoped_conf
 
 _PINS_PATH = Path(__file__).parent / "plan_pins.json"
 
@@ -79,15 +80,8 @@ def _normalized_plan(df) -> str:
     # lengths grow across a long session (#12 vs #1234) — the full suite
     # flipped 8 pins on exactly that artifact. Render untruncated, then
     # normalize the ids away.
-    prev = spark.conf.get("spark.sql.maxMetadataStringLength", None)
-    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
-    try:
+    with scoped_conf(spark, {"spark.sql.maxMetadataStringLength": "100000"}):
         s = df._jdf.queryExecution().executedPlan().toString()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.maxMetadataStringLength")
-        else:
-            spark.conf.set("spark.sql.maxMetadataStringLength", prev)
     s = re.sub(r"#\d+[A-Z]*", "#", s)  # expression ids
     # HOF lambda variables are numbered by a session-global counter
     # (lambda x_2 / y_2 in a fresh session, x_16 / y_17 after other HOF

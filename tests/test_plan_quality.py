@@ -5,6 +5,7 @@ fails CI, not just the benchmark."""
 from __future__ import annotations
 
 from stream_processing_platform_spark.registry import queries
+from stream_processing_platform_spark.session import scoped_conf
 
 
 def _plan(df) -> str:
@@ -250,22 +251,20 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
     write_bucketed(
         li.withColumnRenamed("l_orderkey", "o_orderkey"), "bq_lineitem", ["o_orderkey"], 8
     )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bq_orders").join(spark.table("bq_lineitem"), "o_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, "bucketed join should not shuffle"
-        assert "SortMergeJoin" in plan
-        # sanity: result matches the plain-table join
-        plain = orders.join(
-            li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-        )
-        assert joined.count() == plain.count()
-        plain_plan = plain._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" in plain_plan  # the unbucketed baseline shuffles
+        with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = spark.table("bq_orders").join(spark.table("bq_lineitem"), "o_orderkey")
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" not in plan, "bucketed join should not shuffle"
+            assert "SortMergeJoin" in plan
+            # sanity: result matches the plain-table join
+            plain = orders.join(
+                li.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
+            )
+            assert joined.count() == plain.count()
+            plain_plan = plain._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange" in plain_plan  # the unbucketed baseline shuffles
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS bq_orders")
         spark.sql("DROP TABLE IF EXISTS bq_lineitem")
 
@@ -285,7 +284,7 @@ def test_ann_rerank_candidate_rule_compiles_to_hash_joins(spark, sf_dir):
 
 def test_runtime_bloom_filter_injected(spark, sf_dir):
     """With runtime bloom filters enabled (partitioning.
-    enable_runtime_bloom_filters), a selective dim filter on a
+    runtime_bloom_filter_conf), a selective dim filter on a
     non-broadcastable shuffle join must inject might_contain() as a
     pre-shuffle fact-side filter fed by a bloom_filter_agg on the build
     side — the shuffle-bytes reducer for star joins too big to
@@ -294,36 +293,23 @@ def test_runtime_bloom_filter_injected(spark, sf_dir):
     which is scale-independent."""
     import pyspark.sql.functions as F
 
-    from stream_processing_platform_spark.partitioning import enable_runtime_bloom_filters
+    from stream_processing_platform_spark.partitioning import runtime_bloom_filter_conf
     from stream_processing_platform_spark.tables import load_table
 
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-            "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-            "spark.sql.autoBroadcastJoinThreshold",
-        )
+    conf = {
+        **runtime_bloom_filter_conf(
+            creation_side_threshold="10MB", application_side_threshold="1KB"
+        ),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    try:
-        enable_runtime_bloom_filters(
-            spark, creation_side_threshold="10MB", application_side_threshold="1KB"
-        )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    with scoped_conf(spark, conf):
         l = load_table(spark, sf_dir, "lineitem")
         o = load_table(spark, sf_dir, "orders").where(
             F.col("o_orderstatus") == "F"
         ).select("o_orderkey")
         j = l.join(o, l.l_orderkey == o.o_orderkey).groupBy("l_returnflag").count()
         opt = _optimized(j)
-        assert "might_contain" in opt and "bloom_filter_agg" in opt
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    assert "might_contain" in opt and "bloom_filter_agg" in opt
 
 
 def test_heavy_hitters_verify_join_broadcasts_candidates(spark, sf_dir):

@@ -5,9 +5,11 @@ wire protocol; where the real package is absent (this container) the
 vendored minipb shim provides it, so the e2e test RUNS here —
 ``requires_state_v2_runtime()`` only skips it on an environment with
 neither. Also pinned: the streaming plan compiles with the
-TransformWithStateInPySpark operator, the RocksDB provider conf is set,
-and the processor's pure-Python state logic is correct (exercised
-directly, the same way the state server would call it)."""
+TransformWithStateInPySpark operator without touching the session's
+state-store conf (queries start under ``scoped_conf(spark,
+STATE_V2_CONF)``), and the processor's pure-Python state logic is
+correct (exercised directly, the same way the state server would call
+it)."""
 
 from __future__ import annotations
 
@@ -25,10 +27,10 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from stream_processing_platform_spark.session import scoped_conf
 from stream_processing_platform_spark.sources.streaming import file_source
 from stream_processing_platform_spark.streaming.stateful_v2 import (
-
-    ROCKSDB_PROVIDER,
+    STATE_V2_CONF,
     RunningStatsProcessor,
     requires_state_v2_runtime,
     running_stats,
@@ -98,30 +100,21 @@ def test_processor_state_logic_pure_python():
 
 
 def test_plan_compiles_with_transform_with_state(spark, tmp_path):
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        src = str(tmp_path / "src")
-        spark.createDataFrame(
-            [(1, "a", T(1), 10.0)], EVENT_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-        stream = file_source(spark, src, EVENT_SCHEMA)
-        out = running_stats(stream, "user_id", "value")
-        assert out.isStreaming
-        assert out.schema.simpleString() == (
-            "struct<key:bigint,cnt:bigint,total:double,mn:double,mx:double>"
-        )
-        # the conf the operator requires is set on the session
-        assert (
-            spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-            == ROCKSDB_PROVIDER
-        )
-    finally:
-        # other streaming tests in the shared session keep the default
-        # HDFS-backed provider
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    (key,) = STATE_V2_CONF
+    before = spark.conf.get(key, None)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "a", T(1), 10.0)], EVENT_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = file_source(spark, src, EVENT_SCHEMA)
+    out = running_stats(stream, "user_id", "value")
+    assert out.isStreaming
+    assert out.schema.simpleString() == (
+        "struct<key:bigint,cnt:bigint,total:double,mn:double,mx:double>"
+    )
+    # building leaves the session's state store alone: other streaming
+    # tests in the shared session keep the default HDFS-backed provider
+    assert spark.conf.get(key, None) == before
 
 
 @pytest.mark.skipif(
@@ -133,16 +126,17 @@ def test_running_stats_end_to_end(spark, tmp_path):
     for rows in [[(1, "a", T(1), 10.0), (2, "b", T(2), 1.0)], [(1, "c", T(3), 5.0)]]:
         spark.createDataFrame(rows, EVENT_SCHEMA).coalesce(1).write.mode("append").parquet(src)
     stream = file_source(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
-    out = running_stats(stream, "user_id", "value")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("v2stats")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with scoped_conf(spark, STATE_V2_CONF):
+        q = (
+            running_stats(stream, "user_id", "value")
+            .writeStream.format("memory")
+            .queryName("v2stats")
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
     latest = {r.key: (r.cnt, r.total, r.mn, r.mx) for r in spark.table("v2stats").collect()}
     assert latest[1] == (2, 15.0, 5.0, 10.0)
     assert latest[2] == (1, 1.0, 1.0, 1.0)
@@ -154,23 +148,16 @@ def test_ttl_request_switches_time_mode_to_processing_time(spark, tmp_path):
     running_stats(ttl_ms=...) must build its TransformWithState operator
     in ProcessingTime mode — pinned on the analyzed plan, which records
     the time mode."""
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    try:
-        src = str(tmp_path / "src")
-        spark.createDataFrame(
-            [(1, "a", T(1), 10.0)], EVENT_SCHEMA
-        ).coalesce(1).write.mode("append").parquet(src)
-        stream = file_source(spark, src, EVENT_SCHEMA)
-        with_ttl = running_stats(stream, "user_id", "value", ttl_ms=60_000)
-        plan = with_ttl._jdf.queryExecution().analyzed().toString()
-        assert "ProcessingTime" in plan
-        without = running_stats(stream, "user_id", "value")
-        assert "ProcessingTime" not in without._jdf.queryExecution().analyzed().toString()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    src = str(tmp_path / "src")
+    spark.createDataFrame(
+        [(1, "a", T(1), 10.0)], EVENT_SCHEMA
+    ).coalesce(1).write.mode("append").parquet(src)
+    stream = file_source(spark, src, EVENT_SCHEMA)
+    with_ttl = running_stats(stream, "user_id", "value", ttl_ms=60_000)
+    plan = with_ttl._jdf.queryExecution().analyzed().toString()
+    assert "ProcessingTime" in plan
+    without = running_stats(stream, "user_id", "value")
+    assert "ProcessingTime" not in without._jdf.queryExecution().analyzed().toString()
 
 
 @pytest.mark.skipif(
@@ -200,16 +187,17 @@ def test_map_and_list_state_fold_across_batches(spark, tmp_path):
     from pyspark.sql import functions as F
 
     cat_stream = stream.withColumn("cat", F.lit("all"))
-    counted = map_state_counts(cat_stream, "user_id", "cat")
-    q = (
-        counted.writeStream.format("memory")
-        .queryName("v2map")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with scoped_conf(spark, STATE_V2_CONF):
+        q = (
+            map_state_counts(cat_stream, "user_id", "cat")
+            .writeStream.format("memory")
+            .queryName("v2map")
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
     latest = {}
     for r in spark.table("v2map").collect():
         latest[(r.key, r.cat)] = r.n  # update mode: last write wins
@@ -218,16 +206,17 @@ def test_map_and_list_state_fold_across_batches(spark, tmp_path):
 
     # ListState: ring buffer of last 2 ids, merged across batches
     ts_stream = stream.withColumn("ts_ms", F.unix_millis(F.col("ts")))
-    recent = recent_events(ts_stream, "user_id", "ts_ms", "event_id", n=2)
-    q2 = (
-        recent.writeStream.format("memory")
-        .queryName("v2list")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
+    with scoped_conf(spark, STATE_V2_CONF):
+        q2 = (
+            recent_events(ts_stream, "user_id", "ts_ms", "event_id", n=2)
+            .writeStream.format("memory")
+            .queryName("v2list")
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+        q2.awaitTermination(120)
     latest2 = {r.key: r.recent for r in spark.table("v2list").collect()}
     assert latest2[1] == "b,c"  # a evicted by the n=2 cap across batches
     assert latest2[2] == "d"
@@ -261,17 +250,15 @@ def test_timer_fires_and_evicts_state(spark, tmp_path):
             "append"
         ).parquet(src)
     stream = file_source(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
-    out = expiring_counts(stream, "user_id", delay_ms=-1000)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
     expected = {
         (1, "data", 2), (1, "timeout", 2),
         (1, "data", 1), (1, "timeout", 1),
         (2, "data", 1), (2, "timeout", 1),
     }
-    try:
+    with scoped_conf(spark, {**STATE_V2_CONF, "spark.sql.shuffle.partitions": "2"}):
         q = (
-            out.writeStream.format("memory")
+            expiring_counts(stream, "user_id", delay_ms=-1000)
+            .writeStream.format("memory")
             .queryName("v2timer")
             .outputMode("update")
             .option("checkpointLocation", tempfile.mkdtemp())
@@ -285,8 +272,6 @@ def test_timer_fires_and_evicts_state(spark, tmp_path):
                 break
             time.sleep(1)
         q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # batch 1: key 1 sees 2 rows, then its timer evicts; batch 2: the
     # count RESTARTS at 1 (not 3) proving the eviction, key 2 appears
     assert expected <= rows, rows
@@ -316,12 +301,10 @@ def test_event_time_timer_closes_idle_session(spark, tmp_path):
             "append"
         ).parquet(src)
     stream = file_source(spark, src, EVENT_SCHEMA, max_files_per_trigger=1)
-    out = session_timeouts(stream, "user_id", "ts", gap_ms=10_000)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try:
+    with scoped_conf(spark, {**STATE_V2_CONF, "spark.sql.shuffle.partitions": "2"}):
         q = (
-            out.writeStream.format("memory")
+            session_timeouts(stream, "user_id", "ts", gap_ms=10_000)
+            .writeStream.format("memory")
             .queryName("v2evt")
             .outputMode("update")
             .option("checkpointLocation", tempfile.mkdtemp())
@@ -329,8 +312,6 @@ def test_event_time_timer_closes_idle_session(spark, tmp_path):
             .start()
         )
         terminated = q.awaitTermination(180)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     assert terminated, "event-time mode should drain under availableNow"
     rows = {(r.key, r.kind, r.cnt) for r in spark.table("v2evt").collect()}
     assert (1, "open", 2) in rows
@@ -366,16 +347,17 @@ def test_ewma_state_folds_across_batches_in_order(spark, tmp_path):
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    out = ewma_state(stream, "user_id", alpha=0.25)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("v2ewma")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with scoped_conf(spark, STATE_V2_CONF):
+        q = (
+            ewma_state(stream, "user_id", alpha=0.25)
+            .writeStream.format("memory")
+            .queryName("v2ewma")
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
     latest = {r.key: (r.n, r.ewma_c) for r in spark.table("v2ewma").collect()}
     assert latest[1] == (3, 775.0)  # 400 -> .75*400+.25*800=500 -> .75*500+.25*1600=775
     assert latest[2] == (1, 1200.0)
@@ -408,16 +390,17 @@ def test_holt_state_folds_across_batches_with_trend(spark, tmp_path):
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    out = holt_state(stream, "user_id", alpha=0.5, beta=0.25)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("v2holt")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with scoped_conf(spark, STATE_V2_CONF):
+        q = (
+            holt_state(stream, "user_id", alpha=0.5, beta=0.25)
+            .writeStream.format("memory")
+            .queryName("v2holt")
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
     latest = {r.key: (r.n, r.level_c, r.trend_c) for r in spark.table("v2holt").collect()}
     assert latest[1] == (3, 231.25, 29.6875)
 
@@ -456,16 +439,17 @@ def test_holt_winters_state_init_spans_batches(spark, tmp_path):
         F.unix_millis(F.col("ts")).alias("ts_ms"),
         F.round(F.col("value") * 100, 0).alias("value_cents"),
     )
-    out = holt_winters_state(stream, "user_id", alpha=a, beta=bb, gamma=g, period=m)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("v2hw")
-        .outputMode("update")
-        .option("checkpointLocation", tempfile.mkdtemp())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
+    with scoped_conf(spark, STATE_V2_CONF):
+        q = (
+            holt_winters_state(stream, "user_id", alpha=a, beta=bb, gamma=g, period=m)
+            .writeStream.format("memory")
+            .queryName("v2hw")
+            .outputMode("update")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
     rows = spark.table("v2hw").collect()
     # batch 1 (2 points, still buffering) must emit NOTHING
     assert all(r.n > m for r in rows)

@@ -25,7 +25,6 @@ from stream_processing_platform_spark.streaming import windows as W
 from stream_processing_platform_spark.streaming.dedup import dedup_stream
 from stream_processing_platform_spark.streaming.joins import stream_interval_join
 from stream_processing_platform_spark.streaming.keyed_process import (
-
     dedup_process_function,
     keyed_process,
 )
