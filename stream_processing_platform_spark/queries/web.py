@@ -100,7 +100,7 @@ def _write_warc_docs(spark: SparkSession, sf_dir: str) -> str:
         F.lit("application/http; msgtype=response").alias("content_type"),
         F.encode(http, "UTF-8").alias("payload"),
     )
-    rows.write.format("spp_warc").mode("overwrite").option("gzip", "true").save(out)
+    rows.write.format("spp_warc").mode("overwrite").save(out)
     return out
 
 
@@ -201,7 +201,7 @@ def q_warc_wet_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("text/plain").alias("content_type"),
         F.encode(F.col("text"), "UTF-8").alias("payload"),
     )
-    rows.write.format("spp_warc").mode("overwrite").option("gzip", "true").save(out)
+    rows.write.format("spp_warc").mode("overwrite").save(out)
     back = (
         spark.read.format("spp_warc")
         .load(out)
@@ -1091,9 +1091,7 @@ def _write_warc_pairs(spark: SparkSession, sf_dir: str) -> str:
         F.lit("application/http; msgtype=response").alias("content_type"),
         F.encode(resp_body, "UTF-8").alias("payload"),
     )
-    req.unionAll(resp).write.format("spp_warc").mode("overwrite").option(
-        "gzip", "true"
-    ).save(out)
+    req.unionAll(resp).write.format("spp_warc").mode("overwrite").save(out)
     return out
 
 
@@ -2898,7 +2896,5 @@ def _write_warc_charset(spark: SparkSession, sf_dir: str) -> str:
                 }
             )
 
-    d.mapInPandas(run, schema).write.format("spp_warc").mode(
-        "overwrite"
-    ).option("gzip", "true").save(out)
+    d.mapInPandas(run, schema).write.format("spp_warc").mode("overwrite").save(out)
     return out

@@ -6,38 +6,16 @@ Kafka-ecosystem container format the reference's transport world
 implies (its Kafka operators move JSON; Avro OCF is the at-rest twin)
 — implemented against the public Avro spec, no Avro library.
 
-Layout & commit protocol (same two-phase contract as the
-``spp_manifest`` streaming sink, custom_datasource.py): each write
-task produces one ``part-<uuid>.avro`` file and returns it as a
-commit message; the driver's ``commit`` writes
-``_spp_avro_manifest.json`` ATOMICALLY (tmp + rename) listing exactly
-the committed files, ``abort`` deletes the orphans. Readers trust the
-manifest when present (stale part files from a failed/overwritten job
-are invisible) and fall back to ``*.avro`` listing for
-foreign-written directories.
-
-Scale shape: one input partition per file (the OCF block structure
-streams within a task — no whole-file materialization); the writer is
-one file per task, commit cost O(files) at the driver — the same
-asymptotics as Spark's own file commit protocol. Schema inference
-reads ONE header, not data.
+Listing, the two-phase manifest commit (``_spp_avro_manifest.json``)
+and the file-per-batch stream reader come from file_datasource.py.
+What is Avro's own: the schema is inferred from ONE header (not
+data), each file decodes block by block into Arrow batches (no
+whole-file materialization), and each write task encodes one
+deflate OCF file.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import uuid
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -53,9 +31,12 @@ from pyspark.sql.types import (
 
 from stream_processing_platform_spark.sources.avrocodec import (
     read_header,
-    read_ocf,
     record_fields,
     write_ocf,
+)
+from stream_processing_platform_spark.sources.file_datasource import (
+    FileDataSource,
+    FilePartition,
 )
 
 MANIFEST = "_spp_avro_manifest.json"
@@ -118,33 +99,14 @@ def struct_to_avro_schema(st: StructType, name: str = "row") -> dict:
     }
 
 
-def _list_files(path: str) -> list[str]:
-    mf = os.path.join(path, MANIFEST)
-    if os.path.exists(mf):
-        with open(mf) as fh:
-            names = json.load(fh)["files"]
-        return [os.path.join(path, n) for n in names]
-    return sorted(
-        os.path.join(path, e) for e in os.listdir(path) if e.endswith(".avro")
-    )
-
-
-@dataclass
-class AvroFilePartition(InputPartition):
-    path: str
-
-
 # Rows per Arrow batch: bounds worker memory while keeping batches large
 # enough that the columnar transpose amortizes (the WDS/WARC readers'
 # per-shard batching, adapted to row-oriented OCF files).
 _BATCH_ROWS = 65536
 
 
-def _read_ocf_batches(path: str, struct_schema: StructType, check: bool = True):
-    """Decode one OCF file into pyarrow.RecordBatches. The Python
-    DataSource row path pickles every row across the worker boundary;
-    yielding Arrow batches crosses it columnar instead (same rationale
-    as the WDS/WARC readers)."""
+def _read_ocf_batches(path: str, struct_schema: StructType):
+    """Decode one OCF file into pyarrow.RecordBatches."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -155,10 +117,12 @@ def _read_ocf_batches(path: str, struct_schema: StructType, check: bool = True):
     with open(path, "rb") as f:
         schema, _, _ = read_header(f)
     names = [n for n, _ in record_fields(schema)]
-    if check:
-        want = [f.name for f in struct_schema.fields]
-        if names != want:
-            raise ValueError(f"{path}: field order {names} != expected {want}")
+    # the header is already read, so field-order validation is free — a
+    # foreign-written OCF with reordered same-typed fields must not
+    # silently misattribute columns
+    want = [f.name for f in struct_schema.fields]
+    if names != want:
+        raise ValueError(f"{path}: field order {names} != expected {want}")
     aschema = to_arrow_schema(struct_schema)
 
     def flush(cols):
@@ -183,178 +147,36 @@ def _read_ocf_batches(path: str, struct_schema: StructType, check: bool = True):
         yield flush(cols)
 
 
-class AvroBatchReader(DataSourceReader):
-    def __init__(self, options, schema: StructType):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_avro requires a path")
-        self._schema = schema
-
-    def partitions(self):
-        files = _list_files(self._path)
-        if not files:
-            raise ValueError(f"no .avro files under {self._path!r}")
-        return [AvroFilePartition(p) for p in files]
-
-    def read(self, partition: AvroFilePartition):
-        yield from _read_ocf_batches(partition.path, self._schema)
-
-
-@dataclass
-class AvroPartFile(WriterCommitMessage):
-    name: str
-
-
-class AvroBatchWriter(DataSourceWriter):
-    def __init__(self, options, schema: StructType, overwrite: bool):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_avro requires a path")
-        self._codec = options.get("codec", "deflate")
-        self._schema = struct_to_avro_schema(schema)
-        self._overwrite = overwrite
-        os.makedirs(self._path, exist_ok=True)
-
-    def write(self, iterator) -> AvroPartFile:
-        # Tasks write DOT-PREFIXED temp names (invisible to the *.avro
-        # listing fallback and to the foreign-dir manifest seeding
-        # below); commit() renames the acknowledged set into place.
-        # Without this, an orphan part from a failed/retried attempt of
-        # THIS job — final-named on disk but absent from the commit
-        # messages — would be indistinguishable from foreign data and
-        # get committed, surfacing uncommitted/duplicate rows.
-        name = f"part-{uuid.uuid4().hex}.avro"
-        full = os.path.join(self._path, "." + name + ".tmp")
-        write_ocf(full, self._schema, (tuple(row) for row in iterator), codec=self._codec)
-        return AvroPartFile(name)
-
-    def commit(self, messages) -> None:
-        files = [m.name for m in messages if m is not None]
-        for name in files:
-            os.replace(
-                os.path.join(self._path, "." + name + ".tmp"),
-                os.path.join(self._path, name),
-            )
-        mf_path = os.path.join(self._path, MANIFEST)
-        if not self._overwrite:
-            if os.path.exists(mf_path):
-                # append mode UNIONS with the committed set — a manifest
-                # listing only the new job's files would silently hide
-                # all previously committed data from manifest-trusting
-                # readers
-                with open(mf_path) as fh:
-                    files = json.load(fh)["files"] + files
-            else:
-                # appending into a FOREIGN-written directory (*.avro
-                # files, no manifest): readers previously saw that data
-                # via the listing fallback — seed the committed set from
-                # the listing so the first manifest doesn't hide it.
-                # Safe against this job's own parts: they were renamed
-                # from dot-temps just above, so subtract them; orphans
-                # from failed attempts never got final names.
-                new = set(files)
-                files = sorted(
-                    e for e in os.listdir(self._path)
-                    if e.endswith(".avro") and e not in new
-                ) + files
-        tmp = os.path.join(self._path, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"files": files}, fh)
-        os.replace(tmp, mf_path)
-        if self._overwrite:
-            # overwrite retires the replaced job's part files — left on
-            # disk they would resurface through the manifest-less
-            # *.avro listing fallback for foreign-written directories
-            keep = set(files)
-            for e in os.listdir(self._path):
-                if e.endswith(".avro") and e not in keep:
-                    try:
-                        os.remove(os.path.join(self._path, e))
-                    except FileNotFoundError:
-                        pass
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None:
-                # temp name normally; final name too, in case abort
-                # raced a partially-run commit's renames
-                for name in ("." + m.name + ".tmp", m.name):
-                    try:
-                        os.remove(os.path.join(self._path, name))
-                    except FileNotFoundError:
-                        pass
-
-
-class AvroStreamReader(DataSourceStreamReader):
-    """Streaming twin of the batch reader: a micro-batch per slice of
-    the SORTED file listing — the same files-are-the-log model Spark's
-    own file stream source uses. Offsets are ``{"index": n}`` (files
-    [0, n) consumed); the directory contract is append-only with
-    lexicographically increasing names (the staging harnesses write
-    ``b0001_…``-prefixed files), the standard file-stream assumption.
-    ``latestOffset`` reports everything currently listed — correct for
-    availableNow (which calls it once) and for continuous polling
-    (files landing later surface in the next trigger).
-    """
-
-    def __init__(self, options, schema: StructType):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_avro requires a path")
-        self._schema = schema
-
-    def _files(self) -> list[str]:
-        return _list_files(self._path)
-
-    def initialOffset(self):
-        return {"index": 0}
-
-    def latestOffset(self):
-        return {"index": len(self._files())}
-
-    def partitions(self, start: dict, end: dict):
-        files = self._files()[start["index"]:end["index"]]
-        return [AvroFilePartition(p) for p in files]
-
-    def read(self, partition: AvroFilePartition):
-        # check=True: the header is already read, so field-order
-        # validation is free — a foreign-written OCF with reordered
-        # same-typed fields must not silently misattribute columns
-        # (r14 advice item)
-        yield from _read_ocf_batches(partition.path, self._schema)
-
-    def commit(self, end: dict) -> None:
-        pass  # the checkpointed offset log is the source of truth
-
-    def stop(self) -> None:
-        pass
-
-
-class AvroDataSource(DataSource):
-    """``spark.read.format("spp_avro").load(dir)`` /
+class AvroDataSource(FileDataSource):
+    """``spark.read.format("spp_avro").load(path)`` /
     ``df.write.format("spp_avro").mode(...).save(dir)`` /
     ``spark.readStream.format("spp_avro")...`` (file-per-batch log)."""
+
+    MANIFEST = MANIFEST
+    EXTS = (".avro",)
 
     @classmethod
     def name(cls) -> str:
         return "spp_avro"
 
     def schema(self):
-        files = _list_files(self.options.get("path", ""))
+        files = self.files()
         if not files:
             raise ValueError("cannot infer schema: no .avro files")
         with open(files[0], "rb") as f:
             avro_schema, _, _ = read_header(f)
         return avro_schema_to_struct(avro_schema)
 
-    def reader(self, schema: StructType) -> AvroBatchReader:
-        return AvroBatchReader(self.options, schema)
+    def part_ext(self) -> str:
+        return ".avro"
 
-    def writer(self, schema: StructType, overwrite: bool) -> AvroBatchWriter:
-        return AvroBatchWriter(self.options, schema, overwrite)
+    def read_file(self, part: FilePartition, schema: StructType):
+        return _read_ocf_batches(part.path, schema)
 
-    def streamReader(self, schema: StructType) -> AvroStreamReader:
-        return AvroStreamReader(self.options, schema)
+    def write_file(self, tmp: str, name: str, rows, schema: StructType) -> None:
+        write_ocf(
+            tmp, struct_to_avro_schema(schema), (tuple(r) for r in rows), codec="deflate"
+        )
 
 
 def register_avro_source(spark) -> None:

@@ -6,8 +6,7 @@ The canonical LLM-pipeline input: Common Crawl ships ``.warc.gz`` /
 (q_html_extract's strip chain, Gopher rules, dedup, mixture) all start
 from these records. The reference platform has no WARC surface
 (sources are Kafka/CSV/JSON/collection — taskmanager/operators/
-sources.py), so this is north-star capability, same chassis as the
-``spp_avro`` and ``spp_ticks`` sources (custom_datasource.py).
+sources.py), so this is north-star capability.
 
 Read schema (fixed — WARC is self-describing per record, not per file):
 
@@ -26,11 +25,13 @@ other types are skipped right after their header block parses, before
 any row materializes (a CPU/allocation prune; the bytes still stream
 past, as they must under gzip).
 
-Write side (fixture/export path): each task writes one
-``part-<uuid>.warc[.gz]`` led by a ``warcinfo`` record (the standard
-file-level provenance convention), two-phase manifest commit — the
-same atomic rename + union/seed protocol as spp_avro, commit cost
-O(files) at the driver.
+Write side (fixture/export path): each task writes one member-gzipped
+``part-<uuid>.warc.gz`` led by a ``warcinfo`` record (the standard
+file-level provenance convention). Listing, the two-phase manifest
+commit and the archive-per-batch stream reader come from
+file_datasource.py; batch and stream reads decode through the same
+per-file reader (record-type pruning is a post-scan filter in a stream
+DataFrame — pushFilters is a batch-read surface).
 
 Input rows for the writer: (warc_type, record_id, warc_date,
 target_uri, content_type, payload) — record_id/warc_date/target_uri
@@ -40,27 +41,19 @@ UUIDv5 id and omits the URI header.
 
 from __future__ import annotations
 
-import glob as _glob
-import json
 import os
-import uuid
-from dataclasses import dataclass
+from dataclasses import replace
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    EqualTo,
-    Filter,
-    InputPartition,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import EqualTo, Filter
 from pyspark.sql.types import StructType
 
+from stream_processing_platform_spark.sources.file_datasource import (
+    FileBatchReader,
+    FileDataSource,
+    FilePartition,
+)
 from stream_processing_platform_spark.sources.warccodec import (
     decode_records,
-    encode_record,
     record_id_from,
     write_warc,
 )
@@ -72,32 +65,89 @@ WARC_SCHEMA_DDL = (
     "target_uri string, content_type string, content_length bigint, payload binary"
 )
 
-_EXTS = (".warc", ".warc.gz", ".wet", ".wet.gz")
+_WRITE_COLUMNS = ["warc_type", "record_id", "warc_date", "target_uri", "content_type", "payload"]
+# WARC-Date of the warcinfo record, and of rows whose warc_date is empty
+_WARC_DATE = "2024-01-01T00:00:00Z"
 
 
-def _list_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    mf = os.path.join(path, MANIFEST)
-    if os.path.exists(mf):
-        with open(mf) as fh:
-            return [os.path.join(path, n) for n in json.load(fh)["files"]]
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, e)
-            for e in os.listdir(path)
-            if e.endswith(_EXTS)
+def _read_warc_batches(path: str, warc_type: str | None):
+    """Decode one WARC/WET file into pyarrow.RecordBatches; when
+    ``warc_type`` is set, records of other types are skipped right after
+    their header block parses."""
+    import pyarrow as pa
+
+    base = os.path.basename(path)
+    cols: list[list] = [[] for _ in range(8)]
+
+    def flush():
+        batch = pa.RecordBatch.from_arrays(
+            [
+                pa.array(cols[0], pa.string()),
+                pa.array(cols[1], pa.string()),
+                pa.array(cols[2], pa.string()),
+                pa.array(cols[3], pa.string()),
+                pa.array(cols[4], pa.string()),
+                pa.array(cols[5], pa.string()),
+                pa.array(cols[6], pa.int64()),
+                pa.array(cols[7], pa.binary()),
+            ],
+            names=[
+                "warc_file", "warc_type", "record_id", "warc_date",
+                "target_uri", "content_type", "content_length", "payload",
+            ],
         )
-    return sorted(p for p in _glob.glob(path) if p.endswith(_EXTS))
+        for c in cols:
+            c.clear()
+        return batch
+
+    pending = 0
+    with open(path, "rb") as fh:
+        for headers, body in decode_records(fh):
+            rtype = headers.get("WARC-Type", "")
+            if warc_type is not None and rtype != warc_type:
+                continue
+            cols[0].append(base)
+            cols[1].append(rtype)
+            cols[2].append(headers.get("WARC-Record-ID", ""))
+            cols[3].append(headers.get("WARC-Date", ""))
+            cols[4].append(headers.get("WARC-Target-URI", ""))
+            cols[5].append(headers.get("Content-Type", ""))
+            cols[6].append(len(body))
+            cols[7].append(body)
+            pending += len(body) + 256
+            # cap batch payload (binary Arrow arrays hold 2 GiB max;
+            # stay far below to bound worker memory)
+            if pending >= 64 << 20:
+                yield flush()
+                pending = 0
+    if cols[0]:
+        yield flush()
 
 
-@dataclass
-class WarcFilePartition(InputPartition):
-    path: str
-    warc_type: str | None = None  # pushed-down WARC-Type equality
+def _warc_records(name: str, rows):
+    info = b"software: stream-processing-platform-spark\r\nformat: WARC file version 1.0\r\n"
+    yield (
+        {
+            "WARC-Type": "warcinfo",
+            "WARC-Record-ID": record_id_from(f"warcinfo:{name}"),
+            "WARC-Date": _WARC_DATE,
+            "Content-Type": "application/warc-fields",
+        },
+        info,
+    )
+    for wtype, rid, wdate, uri, ctype, payload in rows:
+        headers = {
+            "WARC-Type": wtype,
+            "WARC-Record-ID": rid or record_id_from(f"{wtype}:{uri}"),
+            "WARC-Date": wdate or _WARC_DATE,
+            "Content-Type": ctype,
+        }
+        if uri:
+            headers["WARC-Target-URI"] = uri
+        yield headers, bytes(payload)
 
 
-class WarcBatchReader(DataSourceReader):
+class WarcBatchReader(FileBatchReader):
     """Batch reader with ADVISORY warc_type pushdown.
 
     Spark reuses ONE reader instance across every scan of the same
@@ -113,9 +163,7 @@ class WarcBatchReader(DataSourceReader):
     prune); conflicting pushdowns disable pruning, never correctness."""
 
     def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_warc requires a path")
+        super().__init__(WarcDataSource(options), None)
         self._pushed_types: set[str] = set()
 
     def pushFilters(self, filters: list[Filter]):
@@ -127,215 +175,17 @@ class WarcBatchReader(DataSourceReader):
             yield f  # ALWAYS re-evaluated by Spark (advisory pushdown)
 
     def partitions(self):
-        files = _list_files(self._path)
-        if not files:
-            raise ValueError(f"no WARC files under {self._path!r}")
         wt = next(iter(self._pushed_types)) if len(self._pushed_types) == 1 else None
-        return [WarcFilePartition(p, wt) for p in files]
-
-    def read(self, partition: WarcFilePartition):
-        # Arrow batches instead of per-row tuples: the row path pickles
-        # every record (payload bytes included) across the Python
-        # worker boundary; columnar batches cross it once per chunk
-        # (same change as WdsBatchReader.read — measured the dominant
-        # read-side cost there).
-        import pyarrow as pa
-
-        base = os.path.basename(partition.path)
-        cols: list[list] = [[] for _ in range(8)]
-
-        def flush():
-            batch = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[0], pa.string()),
-                    pa.array(cols[1], pa.string()),
-                    pa.array(cols[2], pa.string()),
-                    pa.array(cols[3], pa.string()),
-                    pa.array(cols[4], pa.string()),
-                    pa.array(cols[5], pa.string()),
-                    pa.array(cols[6], pa.int64()),
-                    pa.array(cols[7], pa.binary()),
-                ],
-                names=[
-                    "warc_file", "warc_type", "record_id", "warc_date",
-                    "target_uri", "content_type", "content_length", "payload",
-                ],
-            )
-            for c in cols:
-                c.clear()
-            return batch
-
-        pending = 0
-        with open(partition.path, "rb") as fh:
-            for headers, body in decode_records(fh):
-                rtype = headers.get("WARC-Type", "")
-                if partition.warc_type is not None and rtype != partition.warc_type:
-                    continue
-                cols[0].append(base)
-                cols[1].append(rtype)
-                cols[2].append(headers.get("WARC-Record-ID", ""))
-                cols[3].append(headers.get("WARC-Date", ""))
-                cols[4].append(headers.get("WARC-Target-URI", ""))
-                cols[5].append(headers.get("Content-Type", ""))
-                cols[6].append(len(body))
-                cols[7].append(body)
-                pending += len(body) + 256
-                # cap batch payload (binary Arrow arrays hold 2 GiB max;
-                # stay far below to bound worker memory)
-                if pending >= 64 << 20:
-                    yield flush()
-                    pending = 0
-        if cols[0]:
-            yield flush()
+        return [replace(p, pushed=wt) for p in super().partitions()]
 
 
-@dataclass
-class WarcPartFile(WriterCommitMessage):
-    name: str
-
-
-class WarcBatchWriter(DataSourceWriter):
-    """One WARC file per task, warcinfo-led, two-phase manifest commit
-    (protocol identical to spp_avro's writer — see that module's
-    comments for why temp names + union/seed semantics are load-bearing)."""
-
-    def __init__(self, options, schema: StructType, overwrite: bool):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_warc requires a path")
-        self._gzip = str(options.get("gzip", "true")).lower() == "true"
-        self._date = options.get("warc_date", "2024-01-01T00:00:00Z")
-        self._overwrite = overwrite
-        names = [f.name for f in schema.fields]
-        want = ["warc_type", "record_id", "warc_date", "target_uri", "content_type", "payload"]
-        if names != want:
-            raise ValueError(f"spp_warc writer needs columns {want}, got {names}")
-        os.makedirs(self._path, exist_ok=True)
-
-    def _records(self, name: str, iterator):
-        info = f"software: stream-processing-platform-spark\r\nformat: WARC file version 1.0\r\n".encode()
-        yield (
-            {
-                "WARC-Type": "warcinfo",
-                "WARC-Record-ID": record_id_from(f"warcinfo:{name}"),
-                "WARC-Date": self._date,
-                "Content-Type": "application/warc-fields",
-            },
-            info,
-        )
-        for row in iterator:
-            wtype, rid, wdate, uri, ctype, payload = row
-            headers = {
-                "WARC-Type": wtype,
-                "WARC-Record-ID": rid or record_id_from(f"{wtype}:{uri}"),
-                "WARC-Date": wdate or self._date,
-                "Content-Type": ctype,
-            }
-            if uri:
-                headers["WARC-Target-URI"] = uri
-            yield headers, bytes(payload)
-
-    def write(self, iterator) -> WarcPartFile:
-        ext = ".warc.gz" if self._gzip else ".warc"
-        name = f"part-{uuid.uuid4().hex}{ext}"
-        full = os.path.join(self._path, "." + name + ".tmp")
-        write_warc(full, self._records(name, iterator), gzip_members=self._gzip)
-        return WarcPartFile(name)
-
-    def commit(self, messages) -> None:
-        files = [m.name for m in messages if m is not None]
-        for name in files:
-            os.replace(
-                os.path.join(self._path, "." + name + ".tmp"),
-                os.path.join(self._path, name),
-            )
-        mf_path = os.path.join(self._path, MANIFEST)
-        if not self._overwrite:
-            if os.path.exists(mf_path):
-                with open(mf_path) as fh:
-                    files = json.load(fh)["files"] + files
-            else:
-                new = set(files)
-                files = sorted(
-                    e
-                    for e in os.listdir(self._path)
-                    if e.endswith(_EXTS) and e not in new
-                ) + files
-        tmp = os.path.join(self._path, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"files": files}, fh)
-        os.replace(tmp, mf_path)
-        if self._overwrite:
-            keep = set(files)
-            for e in os.listdir(self._path):
-                if e.endswith(_EXTS) and e not in keep:
-                    try:
-                        os.remove(os.path.join(self._path, e))
-                    except FileNotFoundError:
-                        pass
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None:
-                for name in ("." + m.name + ".tmp", m.name):
-                    try:
-                        os.remove(os.path.join(self._path, name))
-                    except FileNotFoundError:
-                        pass
-
-
-class WarcStreamReader(DataSourceStreamReader):
-    """Streaming twin of the batch reader — continuous crawl ingestion:
-    a micro-batch per slice of the sorted archive listing, the same
-    files-are-the-log model as spp_avro's stream reader (offsets are
-    ``{"index": n}`` = archives [0, n) consumed; append-only directory
-    with lexicographically increasing names, the standard file-stream
-    contract; ``latestOffset`` reports everything listed — correct for
-    availableNow and for continuous polling). Record-type pruning is a
-    post-scan filter in the stream DataFrame (pushFilters is a
-    batch-read surface)."""
-
-    def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_warc requires a path")
-
-    def initialOffset(self):
-        return {"index": 0}
-
-    def latestOffset(self):
-        return {"index": len(_list_files(self._path))}
-
-    def partitions(self, start: dict, end: dict):
-        files = _list_files(self._path)[start["index"]:end["index"]]
-        return [WarcFilePartition(p) for p in files]
-
-    def read(self, partition: WarcFilePartition):
-        base = os.path.basename(partition.path)
-        with open(partition.path, "rb") as fh:
-            for headers, body in decode_records(fh):
-                yield (
-                    base,
-                    headers.get("WARC-Type", ""),
-                    headers.get("WARC-Record-ID", ""),
-                    headers.get("WARC-Date", ""),
-                    headers.get("WARC-Target-URI", ""),
-                    headers.get("Content-Type", ""),
-                    len(body),
-                    body,
-                )
-
-    def commit(self, end: dict) -> None:
-        pass  # the checkpointed offset log is the source of truth
-
-    def stop(self) -> None:
-        pass
-
-
-class WarcDataSource(DataSource):
+class WarcDataSource(FileDataSource):
     """``spark.read.format("spp_warc").load(path)`` — path may be a
-    file, a directory, or a glob; ``df.write.format("spp_warc")``;
+    file or a directory; ``df.write.format("spp_warc")``;
     ``spark.readStream.format("spp_warc")`` (archive-per-batch log)."""
+
+    MANIFEST = MANIFEST
+    EXTS = (".warc", ".warc.gz", ".wet", ".wet.gz")
 
     @classmethod
     def name(cls) -> str:
@@ -347,11 +197,20 @@ class WarcDataSource(DataSource):
     def reader(self, schema: StructType) -> WarcBatchReader:
         return WarcBatchReader(self.options)
 
-    def writer(self, schema: StructType, overwrite: bool) -> WarcBatchWriter:
-        return WarcBatchWriter(self.options, schema, overwrite)
+    def writer(self, schema: StructType, overwrite: bool):
+        names = [f.name for f in schema.fields]
+        if names != _WRITE_COLUMNS:
+            raise ValueError(f"spp_warc writer needs columns {_WRITE_COLUMNS}, got {names}")
+        return super().writer(schema, overwrite)
 
-    def streamReader(self, schema: StructType) -> WarcStreamReader:
-        return WarcStreamReader(self.options)
+    def part_ext(self) -> str:
+        return ".warc.gz"
+
+    def read_file(self, part: FilePartition, schema: StructType):
+        return _read_warc_batches(part.path, part.pushed)
+
+    def write_file(self, tmp: str, name: str, rows, schema: StructType) -> None:
+        write_warc(tmp, _warc_records(name, rows), gzip_members=True)
 
 
 def register_warc_source(spark) -> None:

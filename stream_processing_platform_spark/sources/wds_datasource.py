@@ -10,9 +10,8 @@ exactly the property this reader exploits.
 
 The reference platform has no archive-shard surface at all (sources are
 Kafka/CSV/JSON/collection — taskmanager/operators/sources.py); this is
-north-star LLM-pipeline capability on the same chassis as ``spp_warc``
-and ``spp_avro``. The tar container itself is read/written with the
-stdlib ``tarfile`` module (tar is a stdlib-covered format — nothing to
+north-star LLM-pipeline capability. The tar container itself is
+read/written with the stdlib ``tarfile`` module (tar is a stdlib-covered format — nothing to
 re-implement, unlike WARC/Avro/FLAC where the codec layer was built
 from scratch).
 
@@ -32,31 +31,26 @@ faithful to the WebDataset contract, which requires samples to be
 stored contiguously.
 
 Write side: input columns ``(key string, files map<string,binary>)``;
-one ``part-<uuid>.tar[.gz]`` per task with deterministic member
-metadata (mtime 0, uid/gid 0, mode 644, USTAR, extensions in sorted
-order) and the same two-phase manifest commit protocol as spp_warc /
-spp_avro (atomic temp-rename per file, union-or-seed manifest rewrite).
+one ``part-<uuid>.tar[.gz]`` per task (the ``gzip`` option, default
+false) with deterministic member metadata (mtime 0, uid/gid 0, mode
+644, USTAR, extensions in sorted order).
+
+Listing, the two-phase manifest commit and the shard-per-batch stream
+reader come from file_datasource.py.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import io
-import json
 import os
 import tarfile
-import uuid
-from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceStreamReader,
-    DataSourceWriter,
-    InputPartition,
-    WriterCommitMessage,
-)
 from pyspark.sql.types import StructType
+
+from stream_processing_platform_spark.sources.file_datasource import (
+    FileDataSource,
+    FilePartition,
+)
 
 MANIFEST = "_spp_wds_manifest.json"
 
@@ -64,22 +58,6 @@ WDS_SCHEMA_DDL = (
     "shard string, key string, files map<string,binary>, "
     "n_files int, total_bytes bigint"
 )
-
-_EXTS = (".tar", ".tar.gz")
-
-
-def _list_files(path: str) -> list[str]:
-    if os.path.isfile(path):
-        return [path]
-    mf = os.path.join(path, MANIFEST)
-    if os.path.exists(mf):
-        with open(mf) as fh:
-            return [os.path.join(path, n) for n in json.load(fh)["files"]]
-    if os.path.isdir(path):
-        return sorted(
-            os.path.join(path, e) for e in os.listdir(path) if e.endswith(_EXTS)
-        )
-    return sorted(p for p in _glob.glob(path) if p.endswith(_EXTS))
 
 
 def split_member_name(name: str) -> tuple[str, str]:
@@ -92,212 +70,94 @@ def split_member_name(name: str) -> tuple[str, str]:
     return key, ext
 
 
-@dataclass
-class WdsShardPartition(InputPartition):
-    path: str
+def _read_shard_batches(path: str):
+    """Decode one shard into ONE pyarrow.RecordBatch, a row per sample
+    (measured the dominant cost of q_wds_multimodal's read side when
+    rows crossed the worker boundary one by one)."""
+    import pyarrow as pa
+
+    shard = os.path.basename(path)
+    mode = "r|gz" if path.endswith(".gz") else "r|"
+    cur_key: str | None = None
+    cur: dict[str, bytes] = {}
+    shards: list[str] = []
+    keys: list[str] = []
+    files_col: list[list[tuple[str, bytes]]] = []
+    n_files: list[int] = []
+    total_bytes: list[int] = []
+
+    def row(key: str, files: dict[str, bytes]) -> None:
+        shards.append(shard)
+        keys.append(key)
+        files_col.append(list(files.items()))
+        n_files.append(len(files))
+        total_bytes.append(sum(len(v) for v in files.values()))
+
+    with open(path, "rb") as raw, tarfile.open(fileobj=raw, mode=mode) as tf:
+        for member in tf:
+            if not member.isreg():
+                continue
+            key, ext = split_member_name(member.name)
+            if not ext:
+                continue  # extension-less members carry no field name
+            data = tf.extractfile(member).read()
+            if key != cur_key:
+                if cur_key is not None:
+                    row(cur_key, cur)
+                cur_key, cur = key, {}
+            cur[ext] = data
+    if cur_key is not None:
+        row(cur_key, cur)
+    if keys:
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(shards, pa.string()),
+                pa.array(keys, pa.string()),
+                pa.array(files_col, pa.map_(pa.string(), pa.binary())),
+                pa.array(n_files, pa.int32()),
+                pa.array(total_bytes, pa.int64()),
+            ],
+            names=["shard", "key", "files", "n_files", "total_bytes"],
+        )
 
 
-class WdsBatchReader(DataSourceReader):
-    def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_wds requires a path")
-
-    def partitions(self):
-        files = _list_files(self._path)
-        if not files:
-            raise ValueError(f"no WebDataset shards under {self._path!r}")
-        return [WdsShardPartition(p) for p in files]
-
-    def read(self, partition: WdsShardPartition):
-        # Yields ONE pyarrow.RecordBatch per shard instead of per-row
-        # tuples: the Python DataSource row path pickles every row
-        # (binary payloads included) across the worker boundary, while
-        # Arrow batches cross it columnar — measured the dominant cost
-        # of q_wds_multimodal's read side.
-        import pyarrow as pa
-
-        shard = os.path.basename(partition.path)
-        mode = "r|gz" if partition.path.endswith(".gz") else "r|"
-        cur_key: str | None = None
-        cur: dict[str, bytes] = {}
-        shards: list[str] = []
-        keys: list[str] = []
-        files_col: list[list[tuple[str, bytes]]] = []
-        n_files: list[int] = []
-        total_bytes: list[int] = []
-
-        def row(key: str, files: dict[str, bytes]) -> None:
-            shards.append(shard)
-            keys.append(key)
-            files_col.append(list(files.items()))
-            n_files.append(len(files))
-            total_bytes.append(sum(len(v) for v in files.values()))
-
-        with open(partition.path, "rb") as raw, tarfile.open(
-            fileobj=raw, mode=mode
-        ) as tf:
-            for member in tf:
-                if not member.isreg():
-                    continue
-                key, ext = split_member_name(member.name)
-                if not ext:
-                    continue  # extension-less members carry no field name
-                data = tf.extractfile(member).read()
-                if key != cur_key:
-                    if cur_key is not None:
-                        row(cur_key, cur)
-                    cur_key, cur = key, {}
-                cur[ext] = data
-        if cur_key is not None:
-            row(cur_key, cur)
-        if keys:
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(shards, pa.string()),
-                    pa.array(keys, pa.string()),
-                    pa.array(files_col, pa.map_(pa.string(), pa.binary())),
-                    pa.array(n_files, pa.int32()),
-                    pa.array(total_bytes, pa.int64()),
-                ],
-                names=["shard", "key", "files", "n_files", "total_bytes"],
-            )
+def _write_shard(tmp: str, rows, gz: bool) -> None:
+    mode = "w:gz" if gz else "w"
+    with tarfile.open(tmp, mode=mode, format=tarfile.USTAR_FORMAT) as tf:
+        for key, files in rows:
+            if files is None:
+                continue
+            # The reader's split_member_name takes everything before
+            # the FIRST dot as the sample key, so a key containing
+            # '.' (or a path separator) would round-trip to a
+            # DIFFERENT key and silently splinter/merge samples
+            # (r11 ADVICE) — reject it at the datasource boundary.
+            if "." in key or "/" in key or "\\" in key:
+                raise ValueError(
+                    f"spp_wds sample key {key!r} must not contain "
+                    "'.', '/' or '\\\\' — the member name is "
+                    "'<key>.<ext>' and the reader splits on the "
+                    "first dot"
+                )
+            for fext in sorted(files):
+                data = bytes(files[fext])
+                ti = tarfile.TarInfo(name=f"{key}.{fext}")
+                ti.size = len(data)
+                ti.mtime = 0
+                ti.uid = ti.gid = 0
+                ti.uname = ti.gname = ""
+                ti.mode = 0o644
+                tf.addfile(ti, io.BytesIO(data))
 
 
-@dataclass
-class WdsPartFile(WriterCommitMessage):
-    name: str
-
-
-class WdsBatchWriter(DataSourceWriter):
-    """One tar shard per task, two-phase manifest commit (protocol
-    identical to spp_warc's writer)."""
-
-    def __init__(self, options, schema: StructType, overwrite: bool):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_wds requires a path")
-        self._gzip = str(options.get("gzip", "false")).lower() == "true"
-        self._overwrite = overwrite
-        names = [f.name for f in schema.fields]
-        if names != ["key", "files"]:
-            raise ValueError(
-                f"spp_wds writer needs columns ['key', 'files'], got {names}"
-            )
-        os.makedirs(self._path, exist_ok=True)
-
-    def write(self, iterator) -> WdsPartFile:
-        ext = ".tar.gz" if self._gzip else ".tar"
-        name = f"part-{uuid.uuid4().hex}{ext}"
-        full = os.path.join(self._path, "." + name + ".tmp")
-        mode = "w:gz" if self._gzip else "w"
-        with tarfile.open(full, mode=mode, format=tarfile.USTAR_FORMAT) as tf:
-            for key, files in iterator:
-                if files is None:
-                    continue
-                # The reader's split_member_name takes everything before
-                # the FIRST dot as the sample key, so a key containing
-                # '.' (or a path separator) would round-trip to a
-                # DIFFERENT key and silently splinter/merge samples
-                # (r11 ADVICE) — reject it at the datasource boundary.
-                if "." in key or "/" in key or "\\" in key:
-                    raise ValueError(
-                        f"spp_wds sample key {key!r} must not contain "
-                        "'.', '/' or '\\\\' — the member name is "
-                        "'<key>.<ext>' and the reader splits on the "
-                        "first dot"
-                    )
-                for fext in sorted(files):
-                    data = bytes(files[fext])
-                    ti = tarfile.TarInfo(name=f"{key}.{fext}")
-                    ti.size = len(data)
-                    ti.mtime = 0
-                    ti.uid = ti.gid = 0
-                    ti.uname = ti.gname = ""
-                    ti.mode = 0o644
-                    tf.addfile(ti, io.BytesIO(data))
-        return WdsPartFile(name)
-
-    def commit(self, messages) -> None:
-        files = [m.name for m in messages if m is not None]
-        for name in files:
-            os.replace(
-                os.path.join(self._path, "." + name + ".tmp"),
-                os.path.join(self._path, name),
-            )
-        mf_path = os.path.join(self._path, MANIFEST)
-        if not self._overwrite:
-            if os.path.exists(mf_path):
-                with open(mf_path) as fh:
-                    files = json.load(fh)["files"] + files
-            else:
-                new = set(files)
-                files = sorted(
-                    e
-                    for e in os.listdir(self._path)
-                    if e.endswith(_EXTS) and e not in new
-                ) + files
-        tmp = os.path.join(self._path, f".{MANIFEST}.{uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"files": files}, fh)
-        os.replace(tmp, mf_path)
-        if self._overwrite:
-            keep = set(files)
-            for e in os.listdir(self._path):
-                if e.endswith(_EXTS) and e not in keep:
-                    try:
-                        os.remove(os.path.join(self._path, e))
-                    except FileNotFoundError:
-                        pass
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is not None:
-                for name in ("." + m.name + ".tmp", m.name):
-                    try:
-                        os.remove(os.path.join(self._path, name))
-                    except FileNotFoundError:
-                        pass
-
-
-class WdsStreamReader(DataSourceStreamReader):
-    """Streaming twin of the batch reader — shards-are-the-log (the
-    spp_warc/spp_avro model): offsets are ``{"index": n}`` shards
-    consumed from the sorted listing, availableNow drains everything
-    listed, a checkpointed restart consumes only newly-landed shards.
-    The training-ingest shape: shards land, samples stream out."""
-
-    def __init__(self, options):
-        self._path = options.get("path")
-        if not self._path:
-            raise ValueError("spp_wds requires a path")
-        self._batch = WdsBatchReader(options)
-
-    def initialOffset(self):
-        return {"index": 0}
-
-    def latestOffset(self):
-        return {"index": len(_list_files(self._path))}
-
-    def partitions(self, start: dict, end: dict):
-        files = _list_files(self._path)[start["index"]:end["index"]]
-        return [WdsShardPartition(p) for p in files]
-
-    def read(self, partition: WdsShardPartition):
-        yield from self._batch.read(partition)
-
-    def commit(self, end: dict) -> None:
-        pass  # the checkpointed offset log is the source of truth
-
-    def stop(self) -> None:
-        pass
-
-
-class WdsDataSource(DataSource):
+class WdsDataSource(FileDataSource):
     """``spark.read.format("spp_wds").load(path)`` — path may be a
-    shard file, a directory, or a glob; ``df.write.format("spp_wds")``
-    with columns (key, files); ``spark.readStream.format("spp_wds")``
-    (shard-per-batch log)."""
+    shard file or a directory; ``df.write.format("spp_wds")`` with
+    columns (key, files); ``spark.readStream.format("spp_wds")``
+    (shard-per-batch log: shards land, samples stream out)."""
+
+    MANIFEST = MANIFEST
+    EXTS = (".tar", ".tar.gz")
 
     @classmethod
     def name(cls) -> str:
@@ -306,14 +166,25 @@ class WdsDataSource(DataSource):
     def schema(self) -> str:
         return WDS_SCHEMA_DDL
 
-    def reader(self, schema: StructType) -> WdsBatchReader:
-        return WdsBatchReader(self.options)
+    def writer(self, schema: StructType, overwrite: bool):
+        names = [f.name for f in schema.fields]
+        if names != ["key", "files"]:
+            raise ValueError(
+                f"spp_wds writer needs columns ['key', 'files'], got {names}"
+            )
+        return super().writer(schema, overwrite)
 
-    def writer(self, schema: StructType, overwrite: bool) -> WdsBatchWriter:
-        return WdsBatchWriter(self.options, schema, overwrite)
+    def _gzip(self) -> bool:
+        return str(self.options.get("gzip", "false")).lower() == "true"
 
-    def streamReader(self, schema: StructType) -> WdsStreamReader:
-        return WdsStreamReader(self.options)
+    def part_ext(self) -> str:
+        return ".tar.gz" if self._gzip() else ".tar"
+
+    def read_file(self, part: FilePartition, schema: StructType):
+        return _read_shard_batches(part.path)
+
+    def write_file(self, tmp: str, name: str, rows, schema: StructType) -> None:
+        _write_shard(tmp, rows, self._gzip())
 
 
 def register_wds_source(spark) -> None:
