@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # Package the engine library and submit an application to a cluster.
-#   ./submit.sh yarn  examples/training_data_prep.py hdfs:///data/sf100
-#   ./submit.sh k8s   examples/similarity_search.py  s3a://bucket/sf100
+#   ./submit.sh yarn  examples/word_count.py hdfs:///data/sf100
+#   ./submit.sh k8s   examples/word_count.py s3a://bucket/sf100
 set -euo pipefail
 
 MODE="${1:?usage: submit.sh <yarn|k8s|local> <app.py> [app args...]}"

@@ -677,8 +677,7 @@ def ivfpq_topk(
     # --- query side: probes + ADC tables -----------------------------
     q = _prep(queries, id_col, vec_col, "query_id", "_qv")
     if not residual:
-        # non-residual query path is the shared one (also used to search
-        # a PERSISTED index — operators/ann_index.py)
+        # non-residual query path is the shared ivfpq_query
         return ivfpq_query(
             centroids, codebook, index, cn, q, k=k, dim=dim,
             num_subspaces=num_subspaces, nprobe=nprobe, refine=refine,
@@ -770,11 +769,9 @@ def ivfpq_query(
 ) -> DataFrame:
     """The IVF-PQ QUERY path against prebuilt index artifacts —
     (``centroids``: cell/_centroid, ``codebook``: code/m/csub,
-    ``index``: neighbor_id/cell/codes) — used both inline by
-    ``ivfpq_topk`` and to search an index PERSISTED by
-    ``operators/ann_index.py`` (build once, search many: at 100 TB the
-    build scans the corpus once and every later query batch touches
-    only the probed cells' codes plus the re-rank join)."""
+    ``index``: neighbor_id/cell/codes) — used by ``ivfpq_topk``: each
+    query batch touches only the probed cells' codes plus the re-rank
+    join."""
     q = queries_prepped
     probe_w = Window.partitionBy("query_id").orderBy(F.col("_sim").desc(), F.col("cell").asc())
     probes = (

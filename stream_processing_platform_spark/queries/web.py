@@ -421,7 +421,7 @@ _URL_VARIANTS = (
 # would never collapse anything (r11 ADVICE). g varies freely across the
 # documents of one page, so each canonical page receives g%4 × g%8
 # distinct spellings and n_raw_variants > 1 is genuinely exercised
-# (asserted in tests/test_web_curation.py).
+# (asserted in tests/test_webcur.py).
 _HOST_VARIANTS = (
     ("https://", "www.{n}.{s}", ""),
     ("HTTPS://", "WWW.{n}.{s}", ""),       # scheme+host case
@@ -1460,7 +1460,7 @@ _REGW["q_robots_txt_parse"] = _dc_replace_w(
 
 # ------------------------------------------ web-curation funnel (r13)
 #
-# The examples/web_curation.py lineage registered as ONE oracle query
+# The web-curation lineage registered as ONE oracle query
 # (the q_pipeline_funnel precedent, r12 verdict ask #6): canonicalize
 # -> PSL registered domain -> blocklist -> boilerplate -> NFC ->
 # script-mix gate -> canonical-URL dedup, reporting pages, domains and
@@ -1517,7 +1517,7 @@ def _wf_raw_col() -> F.Column:
     "q_web_funnel",
     oracle=None,  # generated below from the same shared fragments
     description="Web-curation funnel capstone (r13): the "
-    "examples/web_curation.py lineage as one composed oracle query — "
+    "web-curation lineage as one composed oracle query — "
     "messy URL variants canonicalize, hosts resolve to registered "
     "domains (full PSL), blocklisted domains drop, chrome-wrapped "
     "pages pass block-level boilerplate extraction (pages whose "

@@ -13,6 +13,9 @@ the partition column choice is the dominant read-side optimization.
 
 from __future__ import annotations
 
+import os
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
@@ -125,8 +128,6 @@ def exactly_once_parquet_sink(
     the reference's at-least-once KafkaSink flush loop (sinks.py:19-104
     acks=all, which still re-emits on replay); reader side consumes
     ``path`` recursively or via the ``batch_id`` partition column."""
-    import os
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(os.path.join(path, f"batch_id={batch_id}"))
 
@@ -182,25 +183,13 @@ def scd2_sink(
     (key, is_current) to touch only changed files — the merge LOGIC
     (scd2_apply) is unchanged.
     """
-    import os
-    import re
-
     from stream_processing_platform_spark.operators import scd
-
-    def _versions(path: str) -> list[int]:
-        if not os.path.isdir(path):
-            return []
-        return sorted(
-            int(m.group(1))
-            for d in os.listdir(path)
-            if (m := re.fullmatch(r"v=(\d+)", d)) and os.path.isdir(os.path.join(path, d))
-        )
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # parent snapshot = newest version BELOW this batch id (replays
         # of batch N must not read N's own partial/failed output)
-        parents = [v for v in _versions(dim_path) if v < batch_id]
+        parents = [v for v in _scd2_versions(dim_path) if v < batch_id]
         if parents:
             current = spark.read.parquet(os.path.join(dim_path, f"v={parents[-1]}"))
             nxt = scd.scd2_apply(
@@ -230,16 +219,21 @@ def scd2_sink(
     return w.start()
 
 
-def scd2_latest_path(dim_path: str) -> str:
-    """Newest snapshot version under a :func:`scd2_sink` dimension."""
-    import os
-    import re
-
-    versions = sorted(
+def _scd2_versions(dim_path: str) -> list[int]:
+    """Sorted snapshot versions (the ``v=<n>`` subdirectories) under a
+    :func:`scd2_sink` dimension; none if the path does not exist yet."""
+    if not os.path.isdir(dim_path):
+        return []
+    return sorted(
         int(m.group(1))
         for d in os.listdir(dim_path)
         if (m := re.fullmatch(r"v=(\d+)", d)) and os.path.isdir(os.path.join(dim_path, d))
     )
+
+
+def scd2_latest_path(dim_path: str) -> str:
+    """Newest snapshot version under a :func:`scd2_sink` dimension."""
+    versions = _scd2_versions(dim_path)
     if not versions:
         raise FileNotFoundError(f"no v=<n> snapshots under {dim_path}")
     return os.path.join(dim_path, f"v={versions[-1]}")

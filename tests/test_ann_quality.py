@@ -294,32 +294,6 @@ def test_ivfpq_residual_encoding_on_clustered_data(spark):
     assert r_res >= r_raw - 0.1, (r_res, r_raw)
 
 
-def test_persisted_index_answers_identically(spark, sf_dir, tmp_path):
-    """build → save → load → search equals the inline ivfpq_topk with
-    the same parameters (same hash-sample artifacts, same query path)."""
-    from stream_processing_platform_spark.operators.ann_index import (
-        build_ivfpq_index,
-        search_ivfpq_index,
-    )
-    from stream_processing_platform_spark.tables import load_table
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.where(F.col("vec_id") < 10)
-    path = str(tmp_path / "ivfpq_idx")
-    build_ivfpq_index(emb, path)
-    from_index = sorted(
-        map(tuple, search_ivfpq_index(spark, path, emb, q, k=5, nprobe=6).collect())
-    )
-    inline = sorted(map(tuple, ivfpq_topk(emb, q, k=5, nprobe=6).collect()))
-    assert from_index == inline
-    # artifacts exist and the codes table is corpus-sized
-    import os
-
-    assert os.path.exists(os.path.join(path, "meta.json"))
-    n_index = spark.read.parquet(os.path.join(path, "index.parquet")).count()
-    assert n_index == emb.count()
-
-
 def test_ivfpq_residual_training_trains_the_codebook(spark):
     """residual=True + train_iters>0 trains the RESIDUAL codebook
     (normalize=False k-means over x/|x| − c/|c|) instead of silently

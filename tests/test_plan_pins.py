@@ -17,9 +17,10 @@ changed), re-run `bench.py` to confirm the new plan is a win or a wash,
 and commit the json together with the plan change.
 
 Normalization strips run-varying tokens (expression ids, plan ids,
-file paths, in-memory relation ids, codegen stage ids) so the hash is
-stable across sessions and scale factors while still covering operator
-choice, ordering, join strategies, and partitioning.
+file paths, in-memory relation ids, codegen stage ids, the core count
+of a round-robin repartition) so the hash is stable across sessions,
+scale factors and core counts while still covering operator choice,
+ordering, join strategies, and partitioning.
 """
 
 from __future__ import annotations
@@ -94,6 +95,13 @@ def _normalized_plan(df) -> str:
     s = re.sub(r"InMemoryFileIndex\[[^\]]*\]", "InMemoryFileIndex[]", s)
     s = re.sub(r"Statistics\([^)]*\)", "Statistics()", s)
     s = re.sub(r"WholeStageCodegen \(\d+\)", "WholeStageCodegen", s)
+    # partitioning.ensure_min_parallelism round-robins to the session's
+    # defaultParallelism, i.e. the core count: pin that the exchange is
+    # there, not how many cores recorded it. Every other count stays.
+    parallelism = spark.sparkContext.defaultParallelism
+    s = s.replace(
+        f"RoundRobinPartitioning({parallelism})", "RoundRobinPartitioning(cores)"
+    )
     return s
 
 
