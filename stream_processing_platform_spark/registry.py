@@ -69,19 +69,19 @@ _loaded = False
 # Registry order = the order the driver runs queries in, and the driver
 # verifies only the first ~50 per round. With >50 registered queries the
 # order IS the coverage policy, so it is explicit here (not an accident of
-# import order) and rotates per round. Round-14 rotation, per the r13
-# verdict ask #3: the window is the 41 remaining r9-stale rows, the
-# seven r13 newborns (first official rows well inside birth+bound),
-# and the two r14 newborns — 50 exactly; then every remaining query
-# ordered by the round of its last official row, ascending (the r10
-# cohort of 50 is the natural r15 window). The freshness bound is ceil(N / window): with N registered
+# import order) and rotates per round. The r16 window is the r10 cohort
+# (50 queries whose last official row is r10); then the r11, r12 and r13
+# cohorts; then the r15 cohort, which is the r14 window verified again
+# at r15. The freshness bound is ceil(N / window): with N registered
 # queries and a 50-slot window a full rotation takes ceil(N/50) rounds,
 # so that staleness is achievable by a perfect rotation and nothing
 # tighter is — every query registration therefore RAISES worst-case
-# staleness and must be worth a ledger slot. scripts/ledger_check.py
-# recomputes this ordering from the CORRECTNESS_r*.json history and exits
-# nonzero if the window about to be submitted would let any query's
-# staleness exceed the freshness bound.
+# staleness and must be worth a ledger slot. The order is kept by hand:
+# scripts/ledger_check.py does not recompute it, it checks it against the
+# CORRECTNESS_r*.json history and exits nonzero if the window about to be
+# submitted would let any query's staleness exceed the freshness bound.
+# Rotate this list whenever a new CORRECTNESS_r*.json lands;
+# tests/test_parity_counts.py::test_ledger_freshness fails until it is.
 # Registration round of queries that did not exist when the official
 # ledger began rotating (scripts/ledger_check.py measures a
 # never-ledgered query's staleness from its BIRTH round, not r0 — a
@@ -106,68 +106,8 @@ _REGISTERED_ROUND.update({'q_lang_id_trained': 13, 'q_web_funnel': 13, 'q_sitema
 _REGISTERED_ROUND.update({'q_outlink_frontier': 14, 'q_lang_mismatch': 14})
 
 _PRIORITY: list[str] = [
-    # ================= r14 window (first 50) =================
-    # Round-14 rotation per the r13 verdict ask #3: the 41 remaining
-    # r9-stale rows, all seven r13 newborns (official rows well inside
-    # their birth+bound budget — the verdict asked not to let them
-    # ride to the r18 wire), and the two r14 newborns. 41+7+2 = 50
-    # exactly; the oldest remaining cohort (r10, 50 rows, staleness 4
-    # at r14) is the natural r15 window.
-    # last official row: r9 (41 queries)
-    'q18_large_volume',
-    'q19_discounted_revenue',
-    'q_ann_ivf',
-    'q_anomaly_zscore',
-    'q_bigram_logprob',
-    'q_bpe_token_count',
-    'q_case_when_anomaly',
-    'q_contamination',
-    'q_corpus_mixture',
-    'q_doc_chunking',
-    'q_doc_chunking_bpe',
-    'q_doc_commonness',
-    'q_dsir_weights',
-    'q_dup_ngram_rate',
-    'q_embedding_quantize',
-    'q_event_sequence',
-    'q_flatmap_wordcount',
-    'q_gopher_rules',
-    'q_grouping_sets',
-    'q_interevent_gaps',
-    'q_join_range',
-    'q_json_extract',
-    'q_pps_sample',
-    'q_sequence_packing',
-    'q_sql_exists',
-    'q_stream_dedup',
-    'q_stream_enrich',
-    'q_stream_event_sequence',
-    'q_stream_gopher_gate',
-    'q_stream_join_interval',
-    'q_stream_join_left',
-    'q_stream_keyed_process',
-    'q_stream_running_agg',
-    'q_stream_window_session',
-    'q_stream_window_sliding',
-    'q_stream_window_tumbling',
-    'q_string_agg',
-    'q_top_tokens',
-    'q_unpivot_event_counts',
-    'q_video_frame_sample',
-    'q_window_navigation',
-    # registered r13 (never ledgered; first official rows this round)
-    'q_lang_id_trained',
-    'q_web_funnel',
-    'q_sitemap_parse',
-    'q_crawl_schedule',
-    'q_http_headers',
-    'q_url_features',
-    'q_stream_charset_ingest',
-    # registered r14 (newborn official rows)
-    'q_outlink_frontier',
-    'q_lang_mismatch',
-    # ================= outside the window =================
-    # last official row: r10 (50 queries — the natural r15 window)
+    # ================= r16 window (first 50) =================
+    # last official row: r10 (50 queries — the oldest cohort)
     'q02_min_cost_supplier',
     'q11_important_stock',
     'q15_top_supplier',
@@ -218,6 +158,7 @@ _PRIORITY: list[str] = [
     'q_stream_weighted_sample',
     'q_unigram_tokenize',
     'q_weighted_sample',
+    # ================= outside the window =================
     # last official row: r11 (50 queries)
     'q_approx_distinct_kmv',
     'q_badwords_filter',
@@ -320,7 +261,7 @@ _PRIORITY: list[str] = [
     'q_window_distribution',
     'q_window_range_frame',
     'q_winsorize',
-    # last official row: r13 (50 queries — freshest cohort)
+    # last official row: r13 (50 queries)
     'q_stream_url_dedup',
     'q_warc_pair_capture',
     'q_approx_distinct',
@@ -371,6 +312,58 @@ _PRIORITY: list[str] = [
     'q12_priority_shipments',
     'q13_customer_distribution',
     'q14_promo_revenue',
+    # last official row: r15 (50 queries — freshest cohort: the r14
+    # window, verified again at r15)
+    'q18_large_volume',
+    'q19_discounted_revenue',
+    'q_ann_ivf',
+    'q_anomaly_zscore',
+    'q_bigram_logprob',
+    'q_bpe_token_count',
+    'q_case_when_anomaly',
+    'q_contamination',
+    'q_corpus_mixture',
+    'q_doc_chunking',
+    'q_doc_chunking_bpe',
+    'q_doc_commonness',
+    'q_dsir_weights',
+    'q_dup_ngram_rate',
+    'q_embedding_quantize',
+    'q_event_sequence',
+    'q_flatmap_wordcount',
+    'q_gopher_rules',
+    'q_grouping_sets',
+    'q_interevent_gaps',
+    'q_join_range',
+    'q_json_extract',
+    'q_pps_sample',
+    'q_sequence_packing',
+    'q_sql_exists',
+    'q_stream_dedup',
+    'q_stream_enrich',
+    'q_stream_event_sequence',
+    'q_stream_gopher_gate',
+    'q_stream_join_interval',
+    'q_stream_join_left',
+    'q_stream_keyed_process',
+    'q_stream_running_agg',
+    'q_stream_window_session',
+    'q_stream_window_sliding',
+    'q_stream_window_tumbling',
+    'q_string_agg',
+    'q_top_tokens',
+    'q_unpivot_event_counts',
+    'q_video_frame_sample',
+    'q_window_navigation',
+    'q_lang_id_trained',
+    'q_web_funnel',
+    'q_sitemap_parse',
+    'q_crawl_schedule',
+    'q_http_headers',
+    'q_url_features',
+    'q_stream_charset_ingest',
+    'q_outlink_frontier',
+    'q_lang_mismatch',
 ]
 
 
