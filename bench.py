@@ -243,40 +243,45 @@ def stream_windowed_agg(spark, sf_dir: str) -> tuple[float, int]:
     n_rows = static.count()
     # The file stream source wants a directory; stage the table into one.
     stage_dir = tempfile.mkdtemp(prefix="spp_bench_stream_src_")
-    os.symlink(path, os.path.join(stage_dir, "events.parquet"))
-    stream = file_source(spark, stage_dir, static.schema)
-    if isinstance(static.schema["ts"].dataType, LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        # micros parquet loads as TIMESTAMP_NTZ, which watermarks reject;
-        # session zone is UTC so the cast preserves the instant
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = tumbling_agg(stream, "ts", "1 hour", ["event_type"], [F.count("*").alias("n")])
+    ckpts: list[str] = []
+    try:
+        os.symlink(path, os.path.join(stage_dir, "events.parquet"))
+        stream = file_source(spark, stage_dir, static.schema)
+        if isinstance(static.schema["ts"].dataType, LongType):
+            stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+        else:
+            # micros parquet loads as TIMESTAMP_NTZ, which watermarks reject;
+            # session zone is UTC so the cast preserves the instant
+            stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        agg = tumbling_agg(stream, "ts", "1 hour", ["event_type"], [F.count("*").alias("n")])
 
-    # Stateful ops create one state-store instance per shuffle partition;
-    # at this volume (~100k rows, a few hundred window-key states) 32
-    # state partitions are pure per-partition overhead. Median-of-3
-    # sweep: 2→77k, 4→89k, 8→82k, 16→64k rows/s — 4 wins. Sizing shuffle
-    # partitions to the data is the same rule SCALE.md applies
-    # everywhere; a real cluster run would raise it with volume.
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
-        # warm-up (JIT/codegen/state-store init) then median of 3 timed
-        # runs — the same methodology as the batch queries.
-        samples: list[float] = []
-        for timed in (False, True, True, True):
-            ckpt = tempfile.mkdtemp(prefix="spp_bench_ckpt_")
-            t0 = time.time()
-            q = (
-                agg.writeStream.format("memory")
-                .queryName("bench_stream_" + uuid.uuid4().hex[:8])
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            if timed:
-                samples.append(time.time() - t0)
+        # Stateful ops create one state-store instance per shuffle partition;
+        # at this volume (~100k rows, a few hundred window-key states) 32
+        # state partitions are pure per-partition overhead. Median-of-3
+        # sweep: 2→77k, 4→89k, 8→82k, 16→64k rows/s — 4 wins. Sizing shuffle
+        # partitions to the data is the same rule SCALE.md applies
+        # everywhere; a real cluster run would raise it with volume.
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            # warm-up (JIT/codegen/state-store init) then median of 3 timed
+            # runs — the same methodology as the batch queries.
+            samples: list[float] = []
+            for timed in (False, True, True, True):
+                ckpts.append(tempfile.mkdtemp(prefix="spp_bench_ckpt_"))
+                t0 = time.time()
+                q = (
+                    agg.writeStream.format("memory")
+                    .queryName("bench_stream_" + uuid.uuid4().hex[:8])
+                    .outputMode("update")
+                    .option("checkpointLocation", ckpts[-1])
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                if timed:
+                    samples.append(time.time() - t0)
+    finally:
+        for d in (stage_dir, *ckpts):
+            shutil.rmtree(d, ignore_errors=True)
     samples.sort()
     return samples[len(samples) // 2], n_rows
 

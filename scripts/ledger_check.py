@@ -1,12 +1,14 @@
 #!/usr/bin/env python
 """Official-ledger freshness check (r10 verdict ask #8).
 
-The driver verifies only the first ~WINDOW queries of ``_PRIORITY`` per
-round, so with N registered queries the rotation order IS the coverage
-policy. This script recomputes, from the CORRECTNESS_r*.json history plus
-the CURRENT ``_PRIORITY`` (i.e. the window about to be submitted), what
-every query's staleness will be after this round's window lands — and
-exits nonzero if any query would exceed the freshness bound.
+The driver verifies only the first ~WINDOW queries of ``queries()`` per
+round, so with N registered queries the registry order IS the coverage
+policy (``registry._ensure_loaded`` sorts it stalest-first from the
+ledger). This script takes the ``queries()`` order (i.e. the window about
+to be submitted) and the CORRECTNESS_r*.json history as parsed by
+``registry.ledger_rounds``, works out what every query's staleness will
+be after this round's window lands, and exits nonzero if any query would
+exceed the freshness bound. A never-ledgered query counts from r0.
 
 Bound: ceil(N / WINDOW) rounds. A perfect rotation over N queries at
 WINDOW per round revisits each query every N/WINDOW rounds, so some query
@@ -19,17 +21,14 @@ recomputes from the live registry size: every query registration raises
 worst-case staleness, so a new operator must be worth a ledger slot.
 
 Usage:
-    python scripts/ledger_check.py [--round N] [--window 50] [--repo DIR]
+    python scripts/ledger_check.py [--round N] [--window 50]
 """
 
 from __future__ import annotations
 
 import argparse
-import glob
-import json
 import math
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -39,53 +38,33 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--round", type=int, default=None, help="current round (default: max ledgered + 1)")
     ap.add_argument("--window", type=int, default=50, help="driver verification window size")
-    ap.add_argument("--repo", default=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     args = ap.parse_args()
 
-    from stream_processing_platform_spark.registry import (
-        _PRIORITY,
-        _REGISTERED_ROUND,
-    )
+    from stream_processing_platform_spark.registry import ledger_rounds, queries
 
-    last: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(args.repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        rnd = int(m.group(1))
-        for q in json.load(open(path)):
-            last[q] = max(last.get(q, 0), rnd)
+    order = list(queries())
+    last = ledger_rounds()
 
     cur = args.round if args.round is not None else (max(last.values(), default=0) + 1)
-    n = len(_PRIORITY)
+    n = len(order)
     bound = math.ceil(n / args.window)
-    window = set(_PRIORITY[: args.window])
+    window = set(order[: args.window])
 
-    failures: list[str] = []
-    post: dict[str, int] = {}
-    for q in _PRIORITY:
-        # A never-ledgered query's staleness counts from its BIRTH round
-        # (a query that did not exist cannot have a stale official row);
-        # it must still land an official row within `bound` rounds of
-        # registration, so deferring newborns cannot hide them forever.
-        baseline = last.get(q, _REGISTERED_ROUND.get(q, 0))
-        post[q] = cur if q in window else baseline
-        if q not in last and q not in window and cur - baseline > bound:
-            failures.append(
-                f"NEVER-CHECKED beyond bound: {q} (registered r{baseline})"
-            )
-    worst = [(cur - r, q) for q, r in post.items()]
-    worst.sort(reverse=True)
-    for staleness, q in worst:
-        if staleness > bound:
-            failures.append(f"stale {staleness} > bound {bound}: {q} (last r{post[q]})")
+    post = {q: cur if q in window else last.get(q, 0) for q in order}
+    worst = sorted(((cur - r, q) for q, r in post.items()), reverse=True)
+    failures = [
+        f"stale {staleness} > bound {bound}: {q} (last r{post[q]})"
+        for staleness, q in worst
+        if staleness > bound
+    ]
 
     # Sanity: the window should be spent on the stalest queries — warn if a
     # window slot goes to a query strictly fresher than one left outside.
-    outside_oldest = min((post[q] for q in _PRIORITY if q not in window), default=cur)
+    outside_oldest = min((post[q] for q in order if q not in window), default=cur)
     wasted = [q for q in window if last.get(q, 0) > outside_oldest]
-    ledgered_only = {q: r for q, r in last.items() if q in set(_PRIORITY)}
     print(
         f"registered={n} window={args.window} round=r{cur} bound={bound} "
-        f"ledgered={len(ledgered_only)} worst_post={worst[0][0]} ({worst[0][1]})"
+        f"ledgered={sum(q in last for q in order)} worst_post={worst[0][0]} ({worst[0][1]})"
     )
     if wasted:
         print(f"note: {len(wasted)} window slots fresher than the oldest outside row: {sorted(wasted)[:5]}...")

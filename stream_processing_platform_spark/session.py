@@ -72,7 +72,13 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession with scale-appropriate defaults.
+    """Build a SparkSession with scale-appropriate defaults, or return the
+    one already running.
+
+    The arguments apply only when a session is created: a running
+    session is returned as it is, so conf a caller set on it (e.g.
+    inside ``scoped_conf``) survives. ``builder.getOrCreate`` would
+    re-apply every builder option to it instead.
 
     ``SPARK_GRAFT_CPUS`` controls local parallelism (default ``*``).
     ``SPARK_GRAFT_MASTER`` overrides the master URL entirely — the
@@ -81,6 +87,9 @@ def get_spark(
     multi-JVM topology that catches anything silently depending on
     driver and executors sharing one process.
     """
+    running = SparkSession._instantiatedSession
+    if running is not None and running._sc._jsc is not None:
+        return running
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = (
         SparkSession.builder.appName(app_name)

@@ -1,8 +1,8 @@
 """The five reference example jobs run in-process on the shared session.
 
 Each ``examples/<name>.py`` asserts its own result inside ``main()``, so
-running it is the whole check. ``get_spark`` is ``getOrCreate`` and no
-example stops the session, so they reuse the test session.
+running it is the whole check. ``get_spark`` returns the running session
+and no example stops it, so they reuse the test session.
 """
 
 from __future__ import annotations

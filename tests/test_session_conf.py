@@ -1,5 +1,6 @@
 """Session-conf scoping: ``session.scoped_conf`` restores what it
-changed, and building a state-v2 operator leaves the shared session's
+changed, ``get_spark`` returns a running session without re-applying
+its defaults, and building a state-v2 operator leaves the shared session's
 conf alone (the state store is chosen per query, under
 ``scoped_conf(spark, STATE_V2_CONF)``)."""
 
@@ -10,7 +11,7 @@ import contextlib
 import pytest
 from pyspark.sql import functions as F
 
-from stream_processing_platform_spark.session import scoped_conf
+from stream_processing_platform_spark.session import get_spark, scoped_conf
 from stream_processing_platform_spark.streaming import stateful_v2 as V2
 
 _SET_KEY = "spark.sql.shuffle.partitions"
@@ -29,6 +30,13 @@ def test_scoped_conf_restores_set_key_and_unsets_new_key(spark, body_raises):
                 raise RuntimeError("body failed")
     assert spark.conf.get(_SET_KEY) == before
     assert spark.conf.get(_UNSET_KEY, None) is None
+
+
+def test_get_spark_returns_running_session_unchanged(spark):
+    conf = {_SET_KEY: "3", "spark.sql.adaptive.enabled": "false"}
+    with scoped_conf(spark, conf):
+        assert get_spark(app_name="another-app") is spark
+        assert {k: spark.conf.get(k) for k in conf} == conf
 
 
 _BUILDERS = {
