@@ -11,50 +11,22 @@ Exit code 1 on any mismatch.
 from __future__ import annotations
 
 import argparse
-import math
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb  # noqa: E402
+from stream_processing_platform_spark.oracle import duck_views, mismatches  # noqa: E402
 
-from stream_processing_platform_spark.oracle_types import (  # noqa: E402
+# perfbench/worker.py::compare reads these as driver_sim attributes.
+from stream_processing_platform_spark.oracle import (  # noqa: E402, F401
     canon_duck_type,
+    canon_rows,
     canon_spark_type,
     duck_type_ok,
     types_agree,
 )
-
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def canon(v):
-    if v is None:
-        return None
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else f"{v:.9g}"
-    if isinstance(v, (list, tuple)):
-        return tuple(canon(x) for x in v)
-    return str(v)
-
-
-def canon_rows(columns, rows):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    names = [columns[i] for i in order]
-    return names, sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
 def main() -> int:
@@ -73,9 +45,7 @@ def main() -> int:
     print(f"entry(): {len(entry_rows)} rows in {time.time() - t0:.1f}s")
     assert len(entry_rows) > 0
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{args.sf}/{t}.parquet')")
+    con = duck_views(args.sf)
 
     qs, oracles = E.queries(), E.oracle_sql()
     only = set(args.only.split(",")) if args.only else None
@@ -85,42 +55,14 @@ def main() -> int:
             continue
         t0 = time.time()
         sdf = qs[name](spark, args.sf)
-        srows = [tuple(r) for r in sdf.collect()]
+        srows = sdf.collect()
         if name in oracles:
-            rel = con.sql(oracles[name])
-            dtypes = [str(t) for t in rel.types]
-            drows, dcols = rel.fetchall(), list(rel.columns)
-            s_names, s_set = canon_rows(sdf.columns, srows)
-            d_names, d_set = canon_rows(dcols, drows)
-            # The driver's hash is TYPE-sensitive (duckdb HUGEINT vs
-            # Spark BIGINT failed q_pps_sample in r8 while a str()-only
-            # compare said MATCH).  Reproduce that sensitivity: every
-            # duckdb output type must be whitelisted, and per-column
-            # canonical types must agree with Spark's schema.
-            type_errs = []
-            duck_by_name = dict(zip(dcols, dtypes))
-            spark_by_name = {f.name: f.dataType for f in sdf.schema.fields}
-            for col in d_names:
-                dt = duck_by_name.get(col)
-                if dt is not None and not duck_type_ok(dt):
-                    type_errs.append(f"{col}: duck type {dt} not whitelisted")
-                sf_t = spark_by_name.get(col)
-                if dt is not None and sf_t is not None:
-                    sc, dc = canon_spark_type(sf_t), canon_duck_type(dt)
-                    if not types_agree(sc, dc):
-                        type_errs.append(f"{col}: spark {sc} vs duck {dc}")
-            ok = s_names == d_names and s_set == d_set and not type_errs
-            status = "MATCH" if ok else "MISMATCH"
-            if not ok:
+            errs = mismatches(sdf.schema, srows, con.sql(oracles[name]))
+            status = "MISMATCH" if errs else "MATCH"
+            if errs:
                 failures.append(name)
-                for e in type_errs:
-                    print(f"  type: {e}")
-                if s_names != d_names:
-                    print(f"  cols: spark={s_names} duck={d_names}")
-                elif s_set != d_set:
-                    s_only = [r for r in s_set if r not in set(d_set)][:3]
-                    d_only = [r for r in d_set if r not in set(s_set)][:3]
-                    print(f"  spark-only: {s_only}\n  duck-only : {d_only}")
+                for e in errs:
+                    print(f"  {e}")
         else:
             status = "rows-only"
         print(f"{name}: {len(srows)} rows {status} ({time.time() - t0:.1f}s)", flush=True)

@@ -11,6 +11,7 @@ Layout:
     session        SparkSession factory tuned for the local[32] harness
     tables         fixture-table loaders (/root/testdata/sf*)
     registry       named-query + duckdb-oracle registry (correctness gate)
+    oracle         the Spark-vs-duckdb compare that gate applies
     operators/     relational operators (stateless, aggs, joins, dedup, topk)
     functions/     scalar/vector function library (text, similarity)
     sources/       batch + streaming source builders

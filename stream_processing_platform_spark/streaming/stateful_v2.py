@@ -160,9 +160,6 @@ class RunningStatsProcessor(StatefulProcessor):
             }
         )
 
-    def close(self) -> None:
-        pass
-
 
 def running_stats(
     df: DataFrame,
@@ -219,9 +216,6 @@ class TypeCountsProcessor(StatefulProcessor):
             ns.append(int(n))
         yield pd.DataFrame({"key": [key[0]] * len(cats), "cat": cats, "n": ns})
 
-    def close(self) -> None:
-        pass
-
 
 def map_state_counts(df: DataFrame, key_col: str, cat_col: str) -> DataFrame:
     """Per-key per-category running counts in a named MapState. Output
@@ -266,9 +260,6 @@ class RecentEventsProcessor(StatefulProcessor):
             {"key": [key[0]], "recent": [",".join(i for _, i in items)]}
         )
 
-    def close(self) -> None:
-        pass
-
 
 def recent_events(df: DataFrame, key_col: str, ts_ms_col: str, id_col: str, n: int = 5) -> DataFrame:
     """Last-n events per key in a named ListState; output (key, recent)
@@ -306,9 +297,6 @@ class ReducingProcessor(StatefulProcessor):
         if acc is not None:
             self._acc.update((acc,))
         yield pd.DataFrame({"key": [key[0]], "acc": [acc]})
-
-    def close(self) -> None:
-        pass
 
 
 def reducing_state(df: DataFrame, key_col: str, reduce_fn, value_col: str = "value") -> DataFrame:
@@ -368,9 +356,6 @@ class EwmaProcessor(StatefulProcessor):
         n += int(len(pdf))
         self._s.update((s, n))
         yield pd.DataFrame({"key": [key[0]], "n": [n], "ewma_c": [s]})
-
-    def close(self) -> None:
-        pass
 
 
 def ewma_state(
@@ -459,9 +444,6 @@ class CusumProcessor(StatefulProcessor):
             }
         )
 
-    def close(self) -> None:
-        pass
-
 
 def cusum_state(
     df: DataFrame,
@@ -524,9 +506,6 @@ class WeightedReservoirProcessor(StatefulProcessor):
             }
         )
 
-    def close(self) -> None:
-        pass
-
 
 def weighted_reservoir_state(
     df: DataFrame,
@@ -585,9 +564,6 @@ class KmvDistinctProcessor(StatefulProcessor):
                 "kth_hash": [ks[-1]],
             }
         )
-
-    def close(self) -> None:
-        pass
 
 
 def kmv_distinct_state(
@@ -666,9 +642,6 @@ class HoltProcessor(StatefulProcessor):
                 "forecast_1_c": [l + b],
             }
         )
-
-    def close(self) -> None:
-        pass
 
 
 def holt_state(
@@ -774,9 +747,6 @@ class HoltWintersProcessor(StatefulProcessor):
                 }
             )
 
-    def close(self) -> None:
-        pass
-
 
 def holt_winters_state(
     df: DataFrame,
@@ -849,9 +819,6 @@ class ExpiringCountProcessor(StatefulProcessor):
         self._handle.deleteTimer(expiredTimerInfo.getExpiryTimeInMs())
         yield pd.DataFrame({"key": [key[0]], "kind": ["timeout"], "cnt": [total]})
 
-    def close(self) -> None:
-        pass
-
 
 def expiring_counts(df: DataFrame, key_col: str, delay_ms: int = 0) -> DataFrame:
     """Per-key counts with timer-driven eviction (ProcessingTime mode).
@@ -907,9 +874,6 @@ class SessionTimeoutProcessor(StatefulProcessor):
         self._sess.clear()
         self._handle.deleteTimer(expiredTimerInfo.getExpiryTimeInMs())
         yield pd.DataFrame({"key": [key[0]], "kind": ["session_closed"], "cnt": [cnt]})
-
-    def close(self) -> None:
-        pass
 
 
 def session_timeouts(

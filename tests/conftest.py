@@ -1,32 +1,20 @@
-"""Shared pytest fixtures: one SparkSession per test session, duckdb
-oracle connection with the fixture tables pre-registered (mirroring the
-driver's harness), and a result-comparison helper that reproduces the
-driver's order-insensitive sorted-column comparison.
+"""Shared pytest fixtures: one SparkSession per test session, a duckdb
+connection with a view per fixture table (``oracle.duck_views``, as
+``scripts/driver_sim.py`` builds it), and ``assert_matches_oracle``,
+which applies the driver's compare (``oracle.mismatches``: sorted
+columns, unordered rows, column types) to a Spark DataFrame.
 """
 
 from __future__ import annotations
 
-import math
 import os
 
-import duckdb
 import pytest
 
+from stream_processing_platform_spark.oracle import duck_views, mismatches
 from stream_processing_platform_spark.session import get_spark
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 @pytest.fixture(scope="session")
@@ -42,57 +30,15 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duck_views(sf_dir)
     yield con
     con.close()
 
 
-def _canon(v):
-    """Canonicalize a cell for cross-engine comparison."""
-    if v is None:
-        return None
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return f"{v:.9g}"
-    if isinstance(v, (list, tuple)):
-        return tuple(_canon(x) for x in v)
-    return str(v)
-
-
-def rows_to_multiset(columns, rows):
-    """Sorted-column, order-insensitive canonical form (mirrors the
-    driver's value-hash comparison)."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-    names = tuple(columns[i] for i in order)
-    canon = sorted(tuple(_canon(r[i]) for i in order) for r in rows)
-    return names, canon
-
-
 def assert_matches_oracle(spark_df, duck_con, sql: str):
-    """Spark result == duckdb result (sorted columns, unordered rows)."""
-    s_rows = [tuple(r) for r in spark_df.collect()]
-    s_cols = spark_df.columns
-    d = duck_con.sql(sql)
-    d_rows = d.fetchall()
-    d_cols = list(d.columns)
-
-    s_names, s_canon = rows_to_multiset(s_cols, s_rows)
-    d_names, d_canon = rows_to_multiset(d_cols, d_rows)
-
-    assert s_names == d_names, f"column mismatch: spark={s_names} duckdb={d_names}"
-    assert len(s_canon) == len(d_canon), (
-        f"row count mismatch: spark={len(s_canon)} duckdb={len(d_canon)}"
-    )
-    if s_canon != d_canon:
-        diffs = [
-            (a, b) for a, b in zip(s_canon, d_canon) if a != b
-        ][:5]
-        raise AssertionError(f"value mismatch, first diffs (spark, duckdb): {diffs}")
+    """Spark result == duckdb result under the driver's oracle compare."""
+    errs = mismatches(spark_df.schema, spark_df.collect(), duck_con.sql(sql))
+    assert not errs, "oracle mismatch:\n" + "\n".join(errs)
 
 
 def pytest_collection_modifyitems(config, items):

@@ -66,25 +66,16 @@ def test_kmv_null_values_ignored_and_empty_input(spark):
     assert kmv_distinct(empty, ["g"], "v", k=8).count() == 0
 
 
-def test_kmv_sql_twin_matches_operator(spark, sf_dir):
-    import os
-
-    import duckdb
-
+def test_kmv_sql_twin_matches_operator(spark, sf_dir, duck):
     from stream_processing_platform_spark.tables import load_table
 
     e = load_table(spark, sf_dir, "events").select("event_type", "user_id")
     got = sorted(
         tuple(r) for r in kmv_distinct(e, ["event_type"], "user_id", k=16).collect()
     )
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW events AS SELECT * FROM "
-        f"read_parquet('{os.path.join(sf_dir, 'events.parquet')}')"
-    )
     exp = sorted(
         tuple(r)
-        for r in con.execute(
+        for r in duck.execute(
             kmv_distinct_sql("events", ["event_type"], "user_id", k=16)
         ).fetchall()
     )
